@@ -426,6 +426,87 @@ def test_microbatch_global_dedup_uses_index_not_sink(spark):
     assert spark.read.parquet(key_index_path(sink)).count() == 2
 
 
+_CACHED_PARTITIONING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
+def _part_files(path: str) -> set[str]:
+    return {f for f in os.listdir(path) if f.startswith("part-") and f.endswith(".parquet")}
+
+
+def _global_dedup_two_batches(spark):
+    """Two landing files of 250 distinct ``es`` docs each, run as two
+    batches of the global-dedup stream. File 1 also carries ten
+    within-batch duplicates and twenty ``en`` docs; file 2 repeats 50
+    of file 1's contents. Returns (landing, sink, ckpt, expected sink
+    rows as ``{(tweet_id, content)}``)."""
+    from twitter_etl_spark.streaming.microbatch import (
+        run_microbatch_pipeline_global_dedup,
+    )
+
+    base = tempfile.mkdtemp()
+    landing = os.path.join(base, "landing")
+    sink = os.path.join(base, "sink")
+    ckpt = os.path.join(base, "ckpt")
+    first = [_doc(i, f"tuit{i} mundo") for i in range(250)]
+    first += [_doc(500 + i, f"TUIT{i}  Mundo") for i in range(10)]
+    first += [_doc(600 + i, f"tweet{i} world", lang="en") for i in range(20)]
+    _write_landing_file(landing, "stream_1.json", first)
+    run_microbatch_pipeline_global_dedup(spark, landing, sink, ckpt)
+    _write_landing_file(
+        landing, "stream_2.json", [_doc(1000 + i, f"tuit{i} mundo") for i in range(200, 450)]
+    )
+    run_microbatch_pipeline_global_dedup(spark, landing, sink, ckpt)
+    expected = {(i, f"tuit{i} mundo") for i in range(250)}
+    expected |= {(1000 + i, f"tuit{i} mundo") for i in range(250, 450)}
+    return landing, sink, ckpt, expected
+
+
+def test_global_dedup_writes_one_file_per_batch(spark):
+    """The cached survivor set of each batch is coalesced by AQE, so a
+    batch of a few hundred rows appends one parquet file to the sink
+    and one to the key-digest index (not one per shuffle partition),
+    with the same rows and digests; the setting stays on the stream's
+    own session and the caller's session keeps Spark's default."""
+    from twitter_etl_spark.streaming.microbatch import key_index_path
+
+    _, sink, _, expected = _global_dedup_two_batches(spark)
+    assert len(_part_files(sink)) == 2
+    assert len(_part_files(key_index_path(sink))) == 2
+    out = spark.read.parquet(sink)
+    assert {(r["tweet_id"], r["content"]) for r in out.collect()} == expected
+    assert set(out.columns) == {"tweet_id", "lang", "content", "source"}
+    idx = [r["digest"] for r in spark.read.parquet(key_index_path(sink)).collect()]
+    assert sorted(idx) == sorted(
+        r["d"] for r in out.select(F.md5("content").alias("d")).collect()
+    )
+    assert spark.conf.get(_CACHED_PARTITIONING) == "false"
+
+
+def test_global_dedup_all_seen_batch_writes_nothing(spark):
+    """A batch whose every ``es`` row is already in the index passes
+    the empty-chunk guard (``main.R:75-78, 114``) on the coalesced
+    cached path: no sink file, no index file, no empty parquet."""
+    from twitter_etl_spark.streaming.microbatch import (
+        key_index_path,
+        run_microbatch_pipeline_global_dedup,
+    )
+
+    landing, sink, ckpt, expected = _global_dedup_two_batches(spark)
+    index = key_index_path(sink)
+    sink_files, index_files = _part_files(sink), _part_files(index)
+    third = [_doc(2000 + i, f"TUIT{i}   mundo") for i in range(0, 450, 3)]
+    third += [_doc(3000 + i, f"nuevo{i} world", lang="en") for i in range(5)]
+    _write_landing_file(landing, "stream_3.json", third)
+    q = run_microbatch_pipeline_global_dedup(spark, landing, sink, ckpt)
+    assert sum(p.numInputRows for p in q.recentProgress) == len(third)
+    assert _part_files(sink) == sink_files
+    assert _part_files(index) == index_files
+    out = spark.read.parquet(sink)
+    assert {(r["tweet_id"], r["content"]) for r in out.collect()} == expected
+    assert spark.read.parquet(index).count() == len(expected)
+    assert spark.conf.get(_CACHED_PARTITIONING) == "false"
+
+
 def test_stateful_running_totals_across_batches(spark):
     """applyInPandasWithState: per-user state survives across
     checkpointed micro-batch runs and keeps accumulating."""

@@ -23,8 +23,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-#: default fixture: the env convention, falling back to the smallest
-#: deterministic SF next to the env-pointed one (plan shape only).
+#: default fixture: ``$SPARK_GRAFT_SF_DIR`` when set, else the fixed
+#: sf0.001 fixture path below (plan shape only); ``--sf`` overrides both.
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 

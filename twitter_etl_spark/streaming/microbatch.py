@@ -77,8 +77,26 @@ def run_microbatch_pipeline_global_dedup(
     per sink row, and appends the surviving digests to the index —
     per-batch read cost follows the number of *keys ever written*
     (a few GB at 100 TB of documents), not sink size, and the scan
-    is a single fixed-width column. On a cluster the index would be
-    bucketed by digest so only the (small) batch side shuffles.
+    is a single fixed-width column.
+
+    Per-batch shape: one anti-join, one cached survivor set, then one
+    append to the sink and one to the index — one file each at a few
+    hundred rows a batch. The survivor set ends in the keep-first
+    window's shuffle, and Spark keeps a cached plan's shuffle
+    partitioning unless
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is
+    on; left off, every batch writes one file per shuffle partition to
+    both, and every later anti-join lists and scans them all. The
+    setting is turned on for the streaming query's own session
+    (``batch_df.sparkSession``, cloned when the query starts), not in
+    ``get_spark``: there it would also change the output partitioning
+    of every frame the query operators persist (their plans are pinned
+    in ``PLAN_SNAPSHOT.json``), while the clone leaves the caller's
+    session at Spark's default.
+
+    On a cluster AQE then sizes each batch's files to the advisory
+    partition size, and the index would be bucketed by digest so only
+    the (small) batch side shuffles.
 
     Ordering: sink append happens before index append, so a crash
     between the two replays the batch and re-appends — at-least-once
@@ -93,6 +111,9 @@ def run_microbatch_pipeline_global_dedup(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         import os
 
+        batch_df.sparkSession.conf.set(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
         out = transform_batch(batch_df).withColumn(
             "__digest", F.md5(F.col("content"))
         )
