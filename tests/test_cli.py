@@ -181,27 +181,17 @@ def test_cert_prefix_staleness_policy():
     # does not apply to them. Keep this set tiny and per-round; it
     # must be emptied at the next rotation.
     deliberate_recerts = {
-        # r17 (optimization round 2): every query path the r16
-        # optimization commits rewrote outside the r16 oracle sample
-        # (VERDICT r16 "Next round" item 2) plus this round's own
-        # optimization targets — their fresh-looking certs describe
-        # pre-rewrite code, so freshness-ordering does not apply.
+        # r18: every consumer of the single connected-components core
+        # (graph.components, driver finish below its pair gate) — their
+        # fresh-looking certs describe the per-round Spark loops the
+        # rewrite deleted, so freshness-ordering does not apply.
         "q_er_cluster",
+        "q_geo_dbscan",
+        "q_dedup_cluster",
+        "q_graph_cc_star",
         "q_sim_knn_clusters",
         "q_multimodal_dedup_cluster",
-        "q_graph_cc_star",
-        "q_graph_ppr",
-        "q_graph_hits",
-        "q_graph_bfs",
-        "q_dedup_minhash_banded",
-        "q_dedup_minhash_est",
-        "q_dedup_minhash_recall",
-        "q_llm_curation_semantic",
-        "q_dedup_ngram_jaccard",
-        "q_graph_labelprop",
-        "q_graph_kcore",
-        "q_geo_dbscan",
-        "q_sim_ann_pq_trained",
+        "q_llm_curation_neardup",
     }
     in_prefix = [
         last[n]

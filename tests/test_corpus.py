@@ -440,14 +440,21 @@ def test_dsir_separates_target_language(spark):
     assert means[True] > means[False]
 
 
-def test_cc_star_equals_label_propagation(spark):
-    """Large-star/small-star CC and min-label propagation are
-    different algorithms over the same pair graph — their outputs
-    must be row-identical (per-doc component-min label)."""
+def test_cc_star_equals_label_propagation(spark, monkeypatch):
+    """Large-star/small-star rounds on Spark and the driver's
+    min-label hooking are different algorithms over the same pair
+    graph — their outputs must be row-identical (per-doc
+    component-min label). ``q_dedup_cluster`` runs the default
+    driver finish; ``q_graph_cc_star`` runs with the driver gate at 0,
+    so every round is a star round."""
+    from twitter_etl_spark.queries import graph
     from twitter_etl_spark.queries.corpus import q_dedup_cluster
-    from twitter_etl_spark.queries.graph import q_graph_cc_star
 
     sf = "/root/testdata/sf0.001"
     a = {(r["doc_id"], r["cluster_id"]) for r in q_dedup_cluster(spark, sf).collect()}
-    b = {(r["doc_id"], r["cluster_id"]) for r in q_graph_cc_star(spark, sf).collect()}
+    monkeypatch.setattr(graph, "_LOCAL_CC_MAX_PAIRS", 0)
+    b = {
+        (r["doc_id"], r["cluster_id"])
+        for r in graph.q_graph_cc_star(spark, sf).collect()
+    }
     assert a == b and len(a) > 0

@@ -140,14 +140,13 @@ def test_pq_recall_audit_invariants(spark):
 
 
 def test_neardup_clusters_match_union_find(spark):
-    """The funnel's CC stage (star_components over the verified
+    """The funnel's CC stage (components over the verified
     banded-MinHash pair set) must agree label-for-label with an
     independent pure-Python union-find over the SAME pair set — the
     Spark-side pin that carries the sf1 decade contract (the DuckDB
     recursive-CTE oracle is prohibitive there; q_geo_dbscan
-    posture). tools/drill_neardup_cc.py runs the same check at sf1."""
-    import importlib.util
-    import os
+    posture)."""
+    from union_find import union_find_labels
 
     from twitter_etl_spark.queries.corpus import (
         _keeper_frame,
@@ -155,15 +154,6 @@ def test_neardup_clusters_match_union_find(spark):
         minhash_banded_pairs,
     )
     from twitter_etl_spark.queries.dedup import _shingles
-
-    spec = importlib.util.spec_from_file_location(
-        "drill_neardup_cc",
-        os.path.join(
-            os.path.dirname(__file__), "..", "tools", "drill_neardup_cc.py"
-        ),
-    )
-    drill = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(drill)
 
     sf = "/root/testdata/sf0.001"
     g = _keeper_frame(spark, sf).localCheckpoint()
@@ -176,7 +166,7 @@ def test_neardup_clusters_match_union_find(spark):
     ]
     assert len(pairs) > 0
     got = {r["node"]: r["cluster_id"] for r in _neardup_clusters(g).collect()}
-    want = drill.union_find_labels(pairs)
+    want = union_find_labels(pairs)
     assert got == want
 
 

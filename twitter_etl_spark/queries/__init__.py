@@ -108,74 +108,70 @@ _MODULES = (
 #      test_cert_prefix_all_oracle_backed::deliberate_rows_only.
 #
 # Provenance (regenerate the wording from tools/gen_cert_rotation.py
-# output, don't hand-narrate — ADVICE r14): the r16 prefix was the
-# tool's 44-name queue plus the r16-new ops and the q_drift_jsd
-# re-cert. This r17 prefix (optimization round 2) front-loads the
-# DELIBERATE RE-CERTS the r16 verdict demanded (item 2): every query
-# path the r16 optimization commits rewrote that was NOT in the r16
-# oracle sample, plus this round's own optimization targets
-# (labelprop/kcore/dbscan/pq_trained) — their last driver certs
-# predate the rewrites, so freshness-ordering does not apply (the
+# output, don't hand-narrate — ADVICE r14): this r18 prefix
+# front-loads the DELIBERATE RE-CERTS: the seven names whose
+# connected-components stage moved to the single graph.components
+# core (driver finish below its pair gate) — their last driver certs
+# describe the per-round Spark loops that no longer exist (the
 # deliberate_recerts set in tests/test_cli.py mirrors this list).
-# Remaining 34 slots: the stalest re-certs, oldest green driver
-# round first (r10 tail + r11 cohort head; boundary ties at r11).
+# Remaining 43 slots: `python tools/gen_cert_rotation.py 7`, the
+# stalest re-certs oldest green driver round first (r11 tail, then
+# the r12 cohort head). At the r12 boundary tie the rows-only
+# q_agg_approx_percentile yields its slot to the next oracle-backed
+# r12 name (policy rule 3).
 _CERT_PREFIX = (
-    # -- r16-rewritten paths (builder-certified only; driver must
-    #    re-certify — VERDICT r16 "Next round" item 2)
-    "q_er_cluster",  # r15 cert, rewritten r16 (star core)
-    "q_sim_knn_clusters",  # r14 cert, rewritten r16 (star core)
-    "q_multimodal_dedup_cluster",  # r15 cert, rewritten r16 (star core)
-    "q_graph_cc_star",  # r12 cert, rewritten r16 (star core)
-    "q_graph_ppr",  # r13 cert, rewritten r16 (loop-invariant ckpts)
-    "q_graph_hits",  # r13 cert, rewritten r16 (per-round ckpts)
-    "q_graph_bfs",  # r12 cert, rewritten r16 (ckpt removal)
-    "q_dedup_minhash_banded",  # r11 cert, touched r16 (_spread)
-    "q_dedup_minhash_est",  # r14 cert, rewritten r16 (shared frames)
-    "q_dedup_minhash_recall",  # r15 cert, recomposed r16
-    "q_llm_curation_semantic",  # r15 cert, inherits star core
-    "q_dedup_ngram_jaccard",  # r11 cert, param-only r16
-    # -- r17 optimization targets (touched this round)
-    "q_graph_labelprop",  # r12 cert
-    "q_graph_kcore",  # r12 cert
-    "q_geo_dbscan",  # r11 cert
-    "q_sim_ann_pq_trained",  # r12 rows>0; rows-only (allowlisted)
-    # -- r17 rotation fillers: stalest re-certs oldest-first
-    #    (tools/gen_cert_rotation.py output with the 16 slots above
-    #    reserved; r10 tail then r11 cohort, ties at r11 arbitrary)
-    "q_sample_leakage_safe",  # r10
-    "q_sample_split",  # r10
-    "q_sample_stratified",  # r10
-    "q_scd2_history",  # r10
-    "q_sessionize_batch",  # r10
-    "q_sim_ann_ivf",  # r10
-    "q_sim_centroid",  # r10
-    "q_sim_maxsim",  # r10
-    "q_sim_quantize",  # r10
-    "q_skew_diagnose",  # r10
-    "q_snapshot_diff",  # r10
-    "q_source_csv",  # r10
-    "q_source_orc",  # r10
-    "q_table_fingerprint",  # r10
-    "q_ts_changepoint",  # r10
-    "q_ts_holt_linear",  # r10
-    "q_ts_sliding_distinct_kmv",  # r10
-    "q_ts_xcorr_daily",  # r10
-    "q_agg_argmax",  # r11
-    "q_agg_histogram",  # r11
-    "q_agg_percentile",  # r11
-    "q_agg_pivot",  # r11
-    "q_agg_quantile_bottomk",  # r11
-    "q_agg_salted_sum",  # r11
-    "q_dedup_semantic",  # r11
-    "q_fn_posexplode",  # r11
-    "q_fn_try_arith",  # r11
-    "q_join_rangedate",  # r11
-    "q_join_salted",  # r11
-    "q_join_size_cm",  # r11
-    "q_mix_weights",  # r11
-    "q_pandas_asof_cogroup",  # r11
-    "q_pandas_gmean",  # r11
-    "q_pandas_zscore",  # r11
+    # -- r18 deliberate re-certs: components() consumers
+    "q_er_cluster",  # r17 cert
+    "q_geo_dbscan",  # r17 cert
+    "q_dedup_cluster",  # r16 cert
+    "q_graph_cc_star",  # r17 cert
+    "q_sim_knn_clusters",  # r17 cert
+    "q_multimodal_dedup_cluster",  # r17 cert
+    "q_llm_curation_neardup",  # r16 cert
+    # -- r18 rotation fillers: stalest re-certs oldest-first
+    "q_session_window_batch",  # r11
+    "q_sim_ann_ivfpq",  # r11
+    "q_subquery_correlated",  # r11
+    "q_text_bm25",  # r11
+    "q_text_chunk_overlap",  # r11
+    "q_text_contamination",  # r11
+    "q_text_corpus_stopwords",  # r11
+    "q_text_domain_stats",  # r11
+    "q_text_heavyhitters",  # r11
+    "q_text_pii_scrub",  # r11
+    "q_text_squeeze_runs",  # r11
+    "q_text_tfidf",  # r11
+    "q_text_unigram_logprob",  # r11
+    "q_text_zipf",  # r11
+    "q_tpch_q1",  # r11
+    "q_tpch_q10",  # r11
+    "q_tpch_q11",  # r11
+    "q_tpch_q12",  # r11
+    "q_tpch_q13",  # r11
+    "q_tpch_q14",  # r11
+    "q_tpch_q16",  # r11
+    "q_tpch_q17",  # r11
+    "q_tpch_q18",  # r11
+    "q_tpch_q19",  # r11
+    "q_tpch_q2",  # r11
+    "q_tpch_q20",  # r11
+    "q_tpch_q21",  # r11
+    "q_tpch_q22",  # r11
+    "q_ts_gapfill",  # r11
+    "q_ts_locf",  # r11
+    "q_ts_resample_ohlc",  # r11
+    "q_agg_collect",  # r12
+    "q_agg_cube",  # r12
+    "q_agg_distinct",  # r12
+    "q_agg_global",  # r12
+    "q_agg_groupby",  # r12
+    "q_agg_having",  # r12
+    "q_agg_multi_distinct",  # r12
+    "q_agg_rollup",  # r12
+    "q_agg_stats",  # r12
+    "q_clean_pipeline",  # r12
+    "q_dedup_exact_global",  # r12
+    "q_dedup_keyed",  # r12
 )
 
 _BY_MODULE: dict = {}

@@ -9,18 +9,15 @@ reference's exact dedup, ``main.R:105``).
 
 Scale design:
 
-- **Connected components**: iterative min-label propagation over
-  DataFrame joins — each round is one shuffle join on the edge key
-  plus a hash agg, and rounds needed = graph diameter. Near-dup
-  graphs are shallow (clusters are template families, diameter ~2-4),
-  so a handful of rounds converge; the loop re-checks convergence
-  with a cheap single-long action per round and each round's result
-  is persisted so lineage stays O(1). For adversarial deep graphs the
-  classic fix is large-star/small-star (alternating pointer-halving
-  rounds, O(log n) convergence) — same join/agg building blocks.
-  Driver-side iteration with a per-round action is inherent to
-  iterative graph algorithms (Pregel does the same superstep
-  barrier); the per-round data volume is |V|+|E|, not the corpus.
+- **Connected components**: :func:`graph.components`, the package's
+  one implementation. It checkpoints the distinct pair set once and,
+  while the set is at most ``graph._LOCAL_CC_MAX_PAIRS`` pairs (every
+  fixture; near-dup graphs are sparse), collects it through Arrow in
+  one job and finishes on the driver in NumPy (min-label hooking plus
+  pointer jumping). Larger graphs contract on the cluster by
+  large-star/small-star rounds (O(log n) whatever the diameter) until
+  they fit under the same gate. Labels are the component minimum in
+  both regimes.
 - **Corpus-adaptive stopwords**: document frequency is one explode +
   hash agg; the discovered stop list is a few hundred tokens max by
   construction (df > threshold·N bounds its size by 1/threshold
@@ -42,13 +39,7 @@ from .dedup import (
     _shingles,
     _spread,
     _tokens,
-    q_dedup_ngram_jaccard,
 )
-
-# Stop when this many min-label rounds did not change any label.
-# Diameter of near-dup clusters is small; 20 is a generous ceiling
-# that also bounds lineage depth.
-_MAX_CC_ROUNDS = 20
 
 # A token present in more than this fraction of documents is
 # corpus boilerplate (template chrome, navigation text) and is
@@ -64,73 +55,13 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``cluster_id`` = min ``doc_id`` of its component — the canonical
     keeper; every other member is a drop candidate.
 
-    Min-label propagation: every node starts labeled with itself;
-    each round every node takes the min label among itself and its
-    neighbors; converged when a round changes nothing. Rounds =
-    component diameter.
+    This is the same computation as ``graph.q_graph_cc_star``
+    (:func:`graph.components` over the same pairs; labels = the
+    component minimum), registered under the dedup name.
     """
-    pairs = q_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    # symmetric edge list: label flows both directions
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    converged = False
-    cached = labels  # the persisted frame backing `labels`
-    for _ in range(_MAX_CC_ROUNDS):
-        # min label among each node's neighborhood
-        neigh_min = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("label").alias("neigh_label"))
-        )
-        new_labels = (
-            labels.join(neigh_min, labels["node"] == neigh_min["src"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("neigh_label", "label")
-                ).alias("label"),
-                (F.coalesce("neigh_label", "label") < F.col("label")).alias(
-                    "changed"
-                ),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # convergence probe: count of strictly-lowered labels this
-        # round — a COUNT, not a sum of ids, so it cannot overflow
-        # no matter how large the id space — one cheap scalar action
-        # per round riding the frame we persist anyway
-        n_changed = new_labels.agg(F.count_if("changed")).first()[0]
-        cached.unpersist()
-        cached = new_labels
-        labels = new_labels.drop("changed")
-        if n_changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        import warnings
+    from .graph import q_graph_cc_star
 
-        warnings.warn(
-            f"q_dedup_cluster: min-label propagation hit the "
-            f"{_MAX_CC_ROUNDS}-round cap before converging; a component "
-            f"with diameter > {_MAX_CC_ROUNDS} exists and its cluster_id "
-            f"is NOT the component min. Raise _MAX_CC_ROUNDS or switch "
-            f"to large-star/small-star (O(log n) rounds).",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
+    return q_graph_cc_star(spark, sf_dir)
 
 
 def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1355,12 +1286,11 @@ def _neardup_clusters(g: DataFrame) -> DataFrame:
     """(node, cluster_id) near-dup components over a keeper frame's
     NORMALIZED text: 3-gram shingles -> banded-MinHash candidates +
     exact-Jaccard verify (:func:`minhash_banded_pairs`) ->
-    ``graph.star_components`` (O(log n) large/small-star rounds,
-    per-round localCheckpoint). Only docs participating in at least
+    ``graph.components``. Only docs participating in at least
     one verified pair appear; the cluster canonical is the component
     min doc_id."""
     from .dedup import _shingles
-    from .graph import star_components
+    from .graph import components
 
     # NOTE (r16 optimization pass): the shingle frame is spread
     # inside minhash_banded_pairs, and deliberately NOT here — that
@@ -1376,7 +1306,7 @@ def _neardup_clusters(g: DataFrame) -> DataFrame:
     pairs = minhash_banded_pairs(sh).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
-    return star_components(pairs, caller="q_llm_curation_neardup")
+    return components(pairs, caller="q_llm_curation_neardup")
 
 
 def neardup_keep_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1405,7 +1335,7 @@ def q_llm_curation_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     full pretraining funnel (r15 verdict #2): normalize -> keep-first
     exact dedup -> **lexical near-dup dedup** (banded MinHash over
     the keepers' normalized text, verified Jaccard >= 0.3, cluster
-    keeper = component min doc_id via ``graph.star_components``) ->
+    keeper = component min doc_id via ``graph.components``) ->
     **semantic dedup** (``q_dedup_semantic_adaptive`` keep flags,
     vec_id <-> doc_id) -> quality gate -> leakage-safe split.
     Output: one (stage, n_docs) row per funnel stage — the 8-row
@@ -1413,8 +1343,8 @@ def q_llm_curation_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape (the 100 TB question): stage 2 is one hash agg on the
     digest; the near-dup stage is the certified sub-quadratic banded
-    machinery (bucket join + df caps, never all-pairs) plus O(log n)
-    star rounds over the VERIFIED pair set only; the semantic stage
+    machinery (bucket join + df caps, never all-pairs) plus
+    ``graph.components`` over the VERIFIED pair set only; the semantic stage
     is the certified occupancy-bounded adaptive pipeline plus one
     8-byte equi-join; the funnel is one global agg unpivoted by
     ``stack`` — eight 1-row counters, not eight jobs. The keeper

@@ -877,17 +877,16 @@ def q_er_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_multimodal_dedup_cluster), and now entities.
 
     Scale: the pair stage is the certified nation-blocked match;
-    components via the shared ``graph.star_components`` core
-    (O(log n) star rounds, per-round localCheckpoint, one
-    convergence probe per round); sizes are one hash agg on the
-    cluster key. Oracle: recursive label-spread CTE over the
-    fuzzy-pair SQL."""
-    from .graph import star_components
+    components via the shared ``graph.components`` core
+    (finished on the driver below its pair gate, star rounds above
+    it); sizes are one hash agg on the cluster key. Oracle:
+    recursive label-spread CTE over the fuzzy-pair SQL."""
+    from .graph import components
 
     pairs = q_er_fuzzy_blocked(spark, sf_dir).select(
         F.col("custkey_a").alias("u"), F.col("custkey_b").alias("v")
     )
-    cc = star_components(pairs, caller="q_er_cluster")
+    cc = components(pairs, caller="q_er_cluster")
     sizes = cc.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("n_members")
     )

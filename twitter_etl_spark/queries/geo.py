@@ -229,7 +229,6 @@ _U60 = float(1 << 60)
 #: mixture centers for the derived substrate (see q_geo_dbscan).
 _DBSCAN_CX = (0.0, 10.0, 0.0, 10.0, 5.0)
 _DBSCAN_CY = (0.0, 0.0, 10.0, 10.0, 5.0)
-_MAX_DBSCAN_CC_ROUNDS = 20
 
 
 def _dbscan_u(key, salt: str) -> F.Column:
@@ -288,20 +287,13 @@ def q_geo_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
       on co-celled candidates only, so comparisons scale with local
       density (the q_geo_grid_join contract).
     - degree/core: one hash agg over neighbor pairs.
-    - components: min-label propagation over CORE-CORE edges only
-      (border points never enter the loop — DBSCAN's density-
-      connectivity is defined through cores), rounds = core-graph
-      diameter, each round one join + one agg. Unlike
-      q_dedup_cluster's persist-only loop (safe at its diameter-2-4
-      near-dup graphs), each round here ends in an EAGER
-      ``localCheckpoint``: the labels frame appears twice in the
-      next round's plan, so without lineage truncation the logical
-      plan doubles per round — 2^rounds nodes, a driver
-      analysis-memory blowup at the eps-graph's ~10-hop blob
-      diameter (measured: OOM at round ~15 without the checkpoint,
-      ~seconds with it). At cluster scale the same call spills to
-      executor-local storage and the loop stays O(|cores|) per
-      round.
+    - components: :func:`graph.components` over the CORE-CORE edges
+      only (border points never enter — DBSCAN's density-connectivity
+      is defined through cores); cluster_id is the component-min core
+      vec_id. At fixture scale the core graph (a few thousand pairs)
+      is collected once and finished on the driver, so the blobs'
+      ~10-hop diameter costs no Spark job per hop; above the driver
+      gate, star rounds contract it in O(log n) rounds.
     - border: non-core points adopt min(cluster) over their core
       neighbors — one join + agg; ties broken by the min, so the
       assignment is deterministic in both engines.
@@ -314,6 +306,8 @@ def q_geo_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE); large-scale verification is the NumPy replica
     pin (sf0.001 and sf1, exact equality — SCALE.md r11)."""
     from pyspark import StorageLevel
+
+    from .graph import components
 
     eps2 = DBSCAN_EPS * DBSCAN_EPS
     pts = _dbscan_points(spark, sf_dir)
@@ -356,45 +350,13 @@ def q_geo_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ca = core.select(F.col("vec_id").alias("a"))
     cb = core.select(F.col("vec_id").alias("b"))
-    edges = nb.join(ca, "a").join(cb, "b").persist(StorageLevel.MEMORY_AND_DISK)
-    labels = core.select(
-        F.col("vec_id").alias("node"), F.col("vec_id").alias("label")
-    ).localCheckpoint(eager=True)
-    converged = False
-    for _ in range(_MAX_DBSCAN_CC_ROUNDS):
-        neigh_min = (
-            edges.join(labels, edges["b"] == labels["node"])
-            .groupBy("a")
-            .agg(F.min("label").alias("nl"))
-        )
-        # eager localCheckpoint: truncates lineage (labels appears
-        # TWICE below — without truncation the plan doubles every
-        # round) and materializes the round in one pass
-        new_labels = (
-            labels.join(neigh_min, labels["node"] == neigh_min["a"], "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nl", "label")).alias("label"),
-                (F.coalesce("nl", "label") < F.col("label")).alias("changed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        n_changed = new_labels.agg(F.count_if("changed")).first()[0]
-        labels = new_labels.drop("changed")
-        if n_changed == 0:
-            converged = True
-            break
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            "q_geo_dbscan: min-label propagation hit the round cap; "
-            "a core component with diameter > "
-            f"{_MAX_DBSCAN_CC_ROUNDS} exists.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    cc = labels.select(F.col("node").alias("vec_id"), F.col("label").alias("cl"))
+    # every core has its self-edge (d = 0), so every core is a node
+    edges = nb.join(ca, "a").join(cb, "b").select(
+        F.col("a").alias("u"), F.col("b").alias("v")
+    )
+    cc = components(edges, caller="q_geo_dbscan").select(
+        F.col("node").alias("vec_id"), F.col("cluster_id").alias("cl")
+    )
     border = (
         nb.join(cc.select(F.col("vec_id").alias("b"), "cl"), "b")
         .join(core.select(F.col("vec_id").alias("a")), "a", "left_anti")

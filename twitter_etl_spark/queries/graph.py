@@ -37,6 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..tables import table
 from .dedup import q_dedup_ngram_jaccard
@@ -222,6 +223,12 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CC_STAR_MAX_ROUNDS = 12
+#: Largest distinct pair set :func:`components` finishes on the
+#: driver. Sized for 8-byte ids: 2M pairs is ~32 MB of int64 Arrow.
+#: String ids cost more per pair — the md5-hex keep-list pairs of the
+#: curation rollup hold ~150 MB of Arrow plus ~4M Python str objects
+#: at the gate. Above it, star rounds run on the cluster instead.
+_LOCAL_CC_MAX_PAIRS = 2_000_000
 
 
 def _large_star(E: DataFrame) -> DataFrame:
@@ -268,23 +275,70 @@ def _small_star(E: DataFrame) -> DataFrame:
     )
 
 
-def star_components(
-    pairs: DataFrame,
-    max_rounds: int = _CC_STAR_MAX_ROUNDS,
-    caller: str = "star_components",
-) -> DataFrame:
-    """Connected components by alternating large-star/small-star
-    (Kiveris et al. 2014) over an (u, v) undirected pair frame —
-    the reusable core of :func:`q_graph_cc_star`, shared with the
-    mutual-kNN semantic cluster stage
-    (``similarity.q_sim_knn_clusters``). Returns one row per node
-    that appears in ``pairs``: (node, cluster_id = component min).
+def _local_labels(t: "pyarrow.Table") -> "pyarrow.Table":
+    """(node, cluster_id = component min) for every id in the
+    two-column pair table ``t``, computed on the driver in NumPy.
 
-    Each phase is one hash-agg (per-node min) + one join-back; the
-    edge set CONTRACTS toward a star forest, so convergence (edge
-    set unchanged, checked with two anti-joins) is reached in
-    O(log n) rounds regardless of diameter. The convergence probes
-    are documented eager loop barriers (the k-core/cc class)."""
+    Ids are compacted by ``np.unique``, which sorts, so the smallest
+    index in a component is its minimum id whatever the id type.
+    Then min-label hooking alternates with pointer jumping: every
+    edge whose endpoints sit in different trees hangs the larger
+    root under the smaller one, and jumping flattens every tree back
+    to depth one. Every two passes at least halve the roots of each
+    component, so passes are O(log n); an edge inside one tree
+    stays inside it, so each pass keeps only the edges that still
+    span two trees."""
+    import numpy as np
+    import pyarrow as pa
+
+    typ = t.schema.field(0).type
+    n = t.num_rows
+    uniq, inv = np.unique(
+        np.concatenate([t.column(0).to_numpy(), t.column(1).to_numpy()]),
+        return_inverse=True,
+    )
+    u, v = inv[:n], inv[n:]
+    root = np.arange(len(uniq))
+    while len(u):
+        ru, rv = root[u], root[v]
+        span = ru != rv
+        u, v, ru, rv = u[span], v[span], ru[span], rv[span]
+        np.minimum.at(root, np.maximum(ru, rv), np.minimum(ru, rv))
+        while True:
+            jumped = root[root]
+            if np.array_equal(jumped, root):
+                break
+            root = jumped
+    return pa.table(
+        {"node": pa.array(uniq, typ), "cluster_id": pa.array(uniq[root], typ)}
+    )
+
+
+def components(pairs: DataFrame, caller: str = "components") -> DataFrame:
+    """Connected components of an undirected (u, v) pair frame: one
+    row per node that appears in ``pairs`` — a self-pair (u, u) makes
+    u a node — as (node, cluster_id), both of the input's id type.
+
+    ``cluster_id`` is the component MINIMUM: the keeper every cluster
+    consumer elects, and the one label the DuckDB oracles (recursive
+    label-spread CTE, then ``min``) derive identically.
+
+    Two regimes, one answer:
+    - At most ``_LOCAL_CC_MAX_PAIRS`` distinct pairs (every fixture;
+      sf0.1 has ~163k): the pair set is collected through Arrow in
+      one job and finished on the driver by :func:`_local_labels`.
+      A Spark job per round over a few thousand rows is nothing but
+      scheduling cost.
+    - Above the gate (the scale path): alternating large-star /
+      small-star rounds (Kiveris et al. 2014) contract the edge set
+      on the cluster in O(log n) rounds whatever the diameter, until
+      it stops changing; labels are read off the star forest.
+
+    The pair count that picks the regime is observed while the pair
+    set is checkpointed, so the test costs no job and ships nothing
+    to the driver when the graph is too large to finish there."""
+    from pyspark.sql import Observation
+
     # ONE materialization of the caller's pair stage (r16 optimization
     # pass, guide §2.4 "don't compute things twice"): the node frame
     # used to re-derive from `pairs` under a lazy persist, so the
@@ -293,7 +347,19 @@ def star_components(
     # label join first touched it. Checkpointing the deduped pair set
     # up front makes every later consumer — the node set, the round-1
     # edge set — a cheap re-read of the materialized 8-byte-pair rows.
-    P = pairs.select("u", "v").distinct().localCheckpoint()
+    size = Observation()
+    P = (
+        pairs.select("u", "v")
+        .distinct()
+        .observe(size, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    spark, typ = P.sparkSession, P.schema["u"].dataType
+    if size.get["n"] <= _LOCAL_CC_MAX_PAIRS:
+        schema = T.StructType(
+            [T.StructField("node", typ), T.StructField("cluster_id", typ)]
+        )
+        return spark.createDataFrame(_local_labels(P.toArrow()), schema)
     nodes = P.select(F.col("u").alias("node")).union(
         P.select(F.col("v").alias("node"))
     ).distinct()
@@ -327,7 +393,7 @@ def star_components(
         return (row["n"], row["h"])
 
     fp = _fp(E)
-    for _ in range(max_rounds):
+    for _ in range(_CC_STAR_MAX_ROUNDS):
         new_E = _small_star(_large_star(E)).localCheckpoint()
         new_fp = _fp(new_E)
         if new_fp == fp:
@@ -352,7 +418,7 @@ def star_components(
 
         warnings.warn(
             f"{caller}: star contraction hit the "
-            f"{max_rounds}-round cap before the edge set "
+            f"{_CC_STAR_MAX_ROUNDS}-round cap before the edge set "
             f"stabilized (needs ~log2 of the largest component); labels "
             f"may not be component minima. Raise the round cap.",
             RuntimeWarning,
@@ -380,21 +446,18 @@ def star_components(
 
 
 def q_graph_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components by alternating large-star/small-star
-    (Kiveris et al. 2014) over the SAME near-dup pair graph as
-    ``q_dedup_cluster`` — the O(log n)-round algorithm that replaces
-    min-label propagation when component diameters are adversarial
-    (label propagation needs diameter rounds; star contraction
-    collapses any path in logarithmically many). Dataflow lives in
-    :func:`star_components` (shared with the semantic kNN cluster
-    stage). Output is identical to ``q_dedup_cluster`` by
-    construction — per-doc component-min label — so it certifies
-    against the same recursive-CTE oracle, and the equality is
-    additionally pinned in tests/test_corpus.py."""
+    """Connected components over the ``q_dedup_ngram_jaccard`` pair
+    graph (``q_dedup_cluster`` returns this query), through
+    :func:`components`: driver finish below its pair gate,
+    alternating large-star / small-star rounds (Kiveris et al. 2014,
+    O(log n) rounds whatever the component diameter) above it. Output
+    is the per-doc component-min label, certified against the
+    recursive-CTE oracle; tests/test_corpus.py pins the star rounds
+    row-identical to the driver finish."""
     pairs = q_dedup_ngram_jaccard(spark, sf_dir).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
-    return star_components(pairs, caller="q_graph_cc_star").select(
+    return components(pairs, caller="q_graph_cc_star").select(
         F.col("node").alias("doc_id"), "cluster_id"
     )
 

@@ -755,18 +755,17 @@ def q_multimodal_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the pair stage is the certified banded/df-capped scan
     (never all-pairs); components come from the shared
-    ``graph.star_components`` core — O(log n) large/small-star
-    rounds, per-round localCheckpoint (the r14 plan-blowup lesson),
-    one convergence probe per round. Oracle: the phash pair SQL
-    wrapped in the recursive label-spread CTE (the q_dedup_cluster
-    pattern)."""
-    from .graph import star_components
+    ``graph.components`` core (finished on the driver below its
+    pair gate, O(log n) large/small-star rounds above it). Oracle:
+    the phash pair SQL wrapped in the recursive label-spread CTE (the
+    q_dedup_cluster pattern)."""
+    from .graph import components
 
     d = table(spark, sf_dir, "documents")
     pairs = phash_pairs(phash_frame(d)).select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     )
-    cc = star_components(pairs, caller="q_multimodal_dedup_cluster")
+    cc = components(pairs, caller="q_multimodal_dedup_cluster")
     return cc.select(
         F.col("node").alias("doc_id"),
         "cluster_id",

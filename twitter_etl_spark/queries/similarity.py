@@ -551,15 +551,18 @@ def _np_book(book: list):
 def _pq_fold_d2(S, C):
     """Squared distances of subvector rows ``S`` (n x d) to centroids
     ``C`` (k x d) with the JVM fold's exact float semantics: per
-    element (x - y)·(x - y), then a left-to-right accumulation from
-    0.0 over positions (``aggregate(zip_with(...), 0.0, acc + x)``).
+    element d = x - y and d * d (an explicit product, not ``** 2``,
+    so the JVM's (x - y)·(x - y) holds by construction), then a
+    left-to-right accumulation from 0.0 over positions
+    (``aggregate(zip_with(...), 0.0, acc + x)``).
     Element-wise NumPy add/sub/mul are the same IEEE-754 ops in the
     same order, so results are bit-identical to the expression form
     (pinned by tests/test_similarity_multimodal.py's replica and the
     index/query cross-check in tests/test_retrieval.py)."""
     import numpy as np
 
-    sq = (S[:, None, :] - C[None, :, :]) ** 2
+    d = S[:, None, :] - C[None, :, :]
+    sq = d * d
     acc = np.zeros(sq.shape[:2])
     for p in range(sq.shape[2]):
         acc += sq[:, :, p]
@@ -593,7 +596,8 @@ def _pq_assign_arrow(sub: DataFrame, book: list) -> DataFrame:
             # gather each row's own subspace codebook, then the exact
             # fold: sq elementwise, accumulate positions left-to-right
             C = B[J]  # (n, ksub, d_sub)
-            sq = (SV[:, None, :] - C) ** 2
+            d = SV[:, None, :] - C
+            sq = d * d
             acc = np.zeros(sq.shape[:2])
             for p in range(sq.shape[2]):
                 acc += sq[:, :, p]
@@ -1553,18 +1557,18 @@ def q_sim_knn_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     policy retains), the component's ``cluster_size``, and ``canon``
     1/0 marking the canonical member itself.
 
-    Components come from the shared large-star/small-star
-    contraction (``graph.star_components`` — O(log n) rounds, each
-    one hash-agg + join-back; the same machinery certified under
-    ``q_graph_cc_star``), so adversarial component diameters cost
-    log rounds, not diameter rounds. The size join shuffles on
+    Components come from the shared ``graph.components`` core (the
+    same machinery certified under ``q_graph_cc_star``): finished on
+    the driver below its pair gate, large-star/small-star rounds
+    above it, so adversarial component diameters never cost
+    diameter rounds. The size join shuffles on
     cluster_id only — (node, cluster_id) rows, never vectors."""
-    from .graph import star_components
+    from .graph import components
 
     edges = q_sim_knn_graph(spark, sf_dir).select(
         F.col("vec_a").alias("u"), F.col("vec_b").alias("v")
     )
-    comp = star_components(edges, caller="q_sim_knn_clusters")
+    comp = components(edges, caller="q_sim_knn_clusters")
     sizes = comp.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )

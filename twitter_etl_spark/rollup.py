@@ -1468,7 +1468,7 @@ def _apply_neardup_keeplist(
     judgment regenerated from the persisted digest-keyed MinHash
     state: band buckets -> df-capped in-bucket pairs -> exact
     digest-set Jaccard >= 0.3 (the ``minhash_rollup_pairs``
-    machinery over digests) -> ``graph.star_components`` over the
+    machinery over digests) -> ``graph.components`` over the
     digest pair graph -> per cluster keep ONLY the digest whose
     CURRENT keeper doc_id is the cluster minimum. Because keeper
     doc_ids are global minima per digest (the order-independent
@@ -1477,7 +1477,7 @@ def _apply_neardup_keeplist(
     rule, whatever order batches arrived in. One anti-join on the
     digest key; document text is never touched."""
     from .queries.corpus import _MINHASH_MAX_BUCKET
-    from .queries.graph import star_components
+    from .queries.graph import components
 
     ndst = read_version(spark, nd_dir).select(*_CURATION_ND_STATE_COLS)
     sig = ndst.select(
@@ -1517,7 +1517,7 @@ def _apply_neardup_keeplist(
         .filter(F.col("jaccard") >= 0.3)
         .select(F.col("dg_a").alias("u"), F.col("dg_b").alias("v"))
     )
-    lab = star_components(pairs, caller="curation_nd_keeplist")
+    lab = components(pairs, caller="curation_nd_keeplist")
     clustered = st.join(lab, st.norm_digest == lab.node)
     mins = clustered.groupBy("cluster_id").agg(
         F.min("doc_id").alias("__min_doc")
