@@ -86,12 +86,9 @@ def test_cert_prefix_all_oracle_backed():
     4 rows-only names whose last driver rows>0 check is r2/r3."""
     from twitter_etl_spark.queries import ALL_ORACLES, ALL_QUERIES
 
-    # r17: q_sim_ann_pq_trained enters the prefix deliberately — its
-    # codes/reconstruction path was rewritten to mapInArrow this
-    # round, so the driver's rows>0 check (its strongest available
-    # gate; the float-argmin fixpoint is oracle-exempt per SURVEY
-    # §5.3) must re-run against the new code.
-    deliberate_rows_only: set = {"q_sim_ann_pq_trained"}
+    # Emptied at the r18 rotation: q_sim_ann_pq_trained, the r17
+    # entry, left the prefix.
+    deliberate_rows_only: set = set()
     prefix = list(ALL_QUERIES)[:50]
     missing = [
         n for n in prefix if n not in ALL_ORACLES and n not in deliberate_rows_only
@@ -192,6 +189,11 @@ def test_cert_prefix_staleness_policy():
         "q_sim_knn_clusters",
         "q_multimodal_dedup_cluster",
         "q_llm_curation_neardup",
+        # r18: labelprop and PPR finish their rounds on the driver
+        # below the same pair gate; their r17 certs describe the
+        # Spark rounds, which now run only above it.
+        "q_graph_labelprop",
+        "q_graph_ppr",
     }
     in_prefix = [
         last[n]

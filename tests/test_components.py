@@ -74,9 +74,9 @@ def test_components_matches_union_find(
 
     monkeypatch.setattr(graph, "_local_labels", spy_local)
     monkeypatch.setattr(graph, "_small_star", spy_star)
-    for gate in (graph._LOCAL_CC_MAX_PAIRS, 0):
+    for gate in (graph._LOCAL_MAX_PAIRS, 0):
         calls["local"], calls["star"] = [], 0
-        monkeypatch.setattr(graph, "_LOCAL_CC_MAX_PAIRS", gate)
+        monkeypatch.setattr(graph, "_LOCAL_MAX_PAIRS", gate)
         out = graph.components(df)
         assert out.schema["node"].dataType == id_type
         assert out.schema["cluster_id"].dataType == id_type

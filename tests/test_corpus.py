@@ -452,7 +452,7 @@ def test_cc_star_equals_label_propagation(spark, monkeypatch):
 
     sf = "/root/testdata/sf0.001"
     a = {(r["doc_id"], r["cluster_id"]) for r in q_dedup_cluster(spark, sf).collect()}
-    monkeypatch.setattr(graph, "_LOCAL_CC_MAX_PAIRS", 0)
+    monkeypatch.setattr(graph, "_LOCAL_MAX_PAIRS", 0)
     b = {
         (r["doc_id"], r["cluster_id"])
         for r in graph.q_graph_cc_star(spark, sf).collect()

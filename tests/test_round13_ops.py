@@ -88,10 +88,12 @@ def test_welch_t_matches_replica(spark):
     assert math.isclose(got["mean_a"], round(sum(a) / na / 100, 6), abs_tol=1e-6)
 
 
-def test_ppr_matches_integer_replica(spark):
+def test_ppr_matches_integer_replica(spark, monkeypatch):
     """q_graph_ppr vs a dict replica of the exact integer fixed-point
-    recurrence (floor divs in the same places) on sf0.001; also pins
-    that teleport mass flows only to seeds."""
+    recurrence (floor divs in the same places) on sf0.001, both with
+    the NumPy finish (default gate) and with the Spark rounds (gate
+    0); also pins that teleport mass flows only to seeds."""
+    from twitter_etl_spark.queries import graph
     from twitter_etl_spark.queries.graph import (
         _PPR_ITERS,
         _PPR_SEEDS,
@@ -122,8 +124,10 @@ def test_ppr_matches_integer_replica(spark):
             nxt[s] = nxt.get(s, 0) + teleport
         ranks = nxt
     want = sorted(ranks.items(), key=lambda kv: (-kv[1], kv[0]))[:20]
-    got = [(r["node"], r["rank_fp"]) for r in q_graph_ppr(spark, sf).collect()]
-    assert got == want
+    for gate in (graph._LOCAL_MAX_PAIRS, 0):
+        monkeypatch.setattr(graph, "_LOCAL_MAX_PAIRS", gate)
+        got = [(r["node"], r["rank_fp"]) for r in q_graph_ppr(spark, sf).collect()]
+        assert got == want, gate
 
 
 def test_c4_rules_flags_each_rule(spark):

@@ -8,9 +8,14 @@ and prints the 50-slot prefix the rotation policy demands: the
 (50 − n_new_slots) stalest certified names oldest-round-first, with
 the remaining slots left for the round's new ops (never-certified
 names are listed separately — they MUST take prefix slots in their
-birth round). This is the mechanical counterpart of
-tests/test_cli.py::test_cert_prefix_staleness_policy, which goes red
-the moment a new CORRECTNESS file lands until the prefix is rotated.
+birth round). Rows-only names (no DuckDB oracle) are skipped and
+listed as comments: rotation rule 3 admits one to the prefix only
+through the ``deliberate_rows_only`` allowlist of
+tests/test_cli.py::test_cert_prefix_all_oracle_backed, so pasting the
+printed names never turns that test red. This is the mechanical
+counterpart of tests/test_cli.py::test_cert_prefix_staleness_policy,
+which goes red the moment a new CORRECTNESS file lands until the
+prefix is rotated.
 """
 
 from __future__ import annotations
@@ -22,7 +27,7 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
-from twitter_etl_spark.queries import ALL_QUERIES  # noqa: E402
+from twitter_etl_spark.queries import ALL_ORACLES, ALL_QUERIES  # noqa: E402
 
 
 def main() -> int:
@@ -56,6 +61,13 @@ def main() -> int:
         (n for n in ALL_QUERIES if n in last), key=lambda n: (last[n], n)
     )
     take = 50 - n_new - len(never)
+    rows_only = [n for n in certified[:take] if n not in ALL_ORACLES]
+    if rows_only:
+        print(f"# {len(rows_only)} rows-only names skipped (rule 3: allowlist "
+              "one in test_cli.py deliberate_rows_only to certify it here):")
+        for n in rows_only:
+            print(f"#   {n}  r{last[n]}")
+        certified = [n for n in certified if n in ALL_ORACLES]
     if take < 0:
         print(f"# ERROR: {n_new} reserved + {len(never)} never-certified "
               "names exceed the 50-slot prefix — the surplus never-certified "

@@ -111,14 +111,14 @@ _MODULES = (
 # output, don't hand-narrate — ADVICE r14): this r18 prefix
 # front-loads the DELIBERATE RE-CERTS: the seven names whose
 # connected-components stage moved to the single graph.components
-# core (driver finish below its pair gate) — their last driver certs
-# describe the per-round Spark loops that no longer exist (the
-# deliberate_recerts set in tests/test_cli.py mirrors this list).
-# Remaining 43 slots: `python tools/gen_cert_rotation.py 7`, the
-# stalest re-certs oldest green driver round first (r11 tail, then
-# the r12 cohort head). At the r12 boundary tie the rows-only
-# q_agg_approx_percentile yields its slot to the next oracle-backed
-# r12 name (policy rule 3).
+# core (driver finish below its pair gate), and labelprop and PPR,
+# whose rounds now also finish on the driver below the same gate —
+# their last driver certs describe per-round Spark loops that no
+# longer run at fixture scale (the deliberate_recerts set in
+# tests/test_cli.py mirrors this list). Remaining 41 slots:
+# `python tools/gen_cert_rotation.py 9`, the stalest re-certs oldest
+# green driver round first (r11 tail, then the r12 cohort head); the
+# tool skips the rows-only q_agg_approx_percentile (policy rule 3).
 _CERT_PREFIX = (
     # -- r18 deliberate re-certs: components() consumers
     "q_er_cluster",  # r17 cert
@@ -128,6 +128,9 @@ _CERT_PREFIX = (
     "q_sim_knn_clusters",  # r17 cert
     "q_multimodal_dedup_cluster",  # r17 cert
     "q_llm_curation_neardup",  # r16 cert
+    # -- r18 deliberate re-certs: driver-finished graph rounds
+    "q_graph_labelprop",  # r17 cert
+    "q_graph_ppr",  # r17 cert
     # -- r18 rotation fillers: stalest re-certs oldest-first
     "q_session_window_batch",  # r11
     "q_sim_ann_ivfpq",  # r11
@@ -170,8 +173,6 @@ _CERT_PREFIX = (
     "q_agg_rollup",  # r12
     "q_agg_stats",  # r12
     "q_clean_pipeline",  # r12
-    "q_dedup_exact_global",  # r12
-    "q_dedup_keyed",  # r12
 )
 
 _BY_MODULE: dict = {}

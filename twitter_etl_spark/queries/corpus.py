@@ -11,7 +11,7 @@ Scale design:
 
 - **Connected components**: :func:`graph.components`, the package's
   one implementation. It checkpoints the distinct pair set once and,
-  while the set is at most ``graph._LOCAL_CC_MAX_PAIRS`` pairs (every
+  while the set is at most ``graph._LOCAL_MAX_PAIRS`` pairs (every
   fixture; near-dup graphs are sparse), collects it through Arrow in
   one job and finishes on the driver in NumPy (min-label hooking plus
   pointer jumping). Larger graphs contract on the cluster by

@@ -223,12 +223,30 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CC_STAR_MAX_ROUNDS = 12
-#: Largest distinct pair set :func:`components` finishes on the
-#: driver. Sized for 8-byte ids: 2M pairs is ~32 MB of int64 Arrow.
-#: String ids cost more per pair — the md5-hex keep-list pairs of the
-#: curation rollup hold ~150 MB of Arrow plus ~4M Python str objects
-#: at the gate. Above it, star rounds run on the cluster instead.
-_LOCAL_CC_MAX_PAIRS = 2_000_000
+#: Largest pair set :func:`_checkpoint_pairs` hands to the driver, so
+#: the largest graph :func:`components`, ``q_graph_labelprop`` and
+#: ``q_graph_ppr`` finish in NumPy. Sized for 8-byte ids: 2M pairs is
+#: ~32 MB of int64 Arrow. String ids cost more per pair — the md5-hex
+#: keep-list pairs of the curation rollup hold ~150 MB of Arrow plus
+#: ~4M Python str objects at the gate. Above it, each caller runs its
+#: Spark rounds on the cluster instead.
+_LOCAL_MAX_PAIRS = 2_000_000
+
+
+def _checkpoint_pairs(pairs: DataFrame) -> tuple:
+    """``(P, t)``: ``pairs`` materialized once by ``localCheckpoint``,
+    and ``P`` as an Arrow table when it holds at most
+    ``_LOCAL_MAX_PAIRS`` rows, else None.
+
+    The rows are counted by an ``Observation`` on the checkpoint job
+    itself, so the test costs no job and ships nothing to the driver
+    when the graph is too large to finish there; below the gate the
+    collect is one more job over the materialized rows."""
+    from pyspark.sql import Observation
+
+    size = Observation()
+    P = pairs.observe(size, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    return P, (P.toArrow() if size.get["n"] <= _LOCAL_MAX_PAIRS else None)
 
 
 def _large_star(E: DataFrame) -> DataFrame:
@@ -275,13 +293,29 @@ def _small_star(E: DataFrame) -> DataFrame:
     )
 
 
+def _compact(t: "pyarrow.Table") -> tuple:
+    """``(ids, src, dst)`` for the two-column pair table ``t``: the
+    sorted distinct ids, and both directions of every pair as compact
+    indices into them (the first ``t.num_rows`` entries of ``src`` and
+    ``dst`` are the pairs as given). ``np.unique`` sorts, so index
+    order is id order whatever the id type."""
+    import numpy as np
+
+    m = t.num_rows
+    ids, inv = np.unique(
+        np.concatenate([t.column(0).to_numpy(), t.column(1).to_numpy()]),
+        return_inverse=True,
+    )
+    return ids, inv, np.concatenate([inv[m:], inv[:m]])
+
+
 def _local_labels(t: "pyarrow.Table") -> "pyarrow.Table":
     """(node, cluster_id = component min) for every id in the
     two-column pair table ``t``, computed on the driver in NumPy.
 
-    Ids are compacted by ``np.unique``, which sorts, so the smallest
-    index in a component is its minimum id whatever the id type.
-    Then min-label hooking alternates with pointer jumping: every
+    Ids are compacted by :func:`_compact`, so the smallest index in
+    a component is its minimum id whatever the id type. Then
+    min-label hooking alternates with pointer jumping: every
     edge whose endpoints sit in different trees hangs the larger
     root under the smaller one, and jumping flattens every tree back
     to depth one. Every two passes at least halve the roots of each
@@ -292,12 +326,8 @@ def _local_labels(t: "pyarrow.Table") -> "pyarrow.Table":
     import pyarrow as pa
 
     typ = t.schema.field(0).type
-    n = t.num_rows
-    uniq, inv = np.unique(
-        np.concatenate([t.column(0).to_numpy(), t.column(1).to_numpy()]),
-        return_inverse=True,
-    )
-    u, v = inv[:n], inv[n:]
+    uniq, src, dst = _compact(t)
+    u, v = src[: t.num_rows], dst[: t.num_rows]
     root = np.arange(len(uniq))
     while len(u):
         ru, rv = root[u], root[v]
@@ -323,8 +353,8 @@ def components(pairs: DataFrame, caller: str = "components") -> DataFrame:
     consumer elects, and the one label the DuckDB oracles (recursive
     label-spread CTE, then ``min``) derive identically.
 
-    Two regimes, one answer:
-    - At most ``_LOCAL_CC_MAX_PAIRS`` distinct pairs (every fixture;
+    Two regimes, one answer, picked by :func:`_checkpoint_pairs`:
+    - At most ``_LOCAL_MAX_PAIRS`` distinct pairs (every fixture;
       sf0.1 has ~163k): the pair set is collected through Arrow in
       one job and finished on the driver by :func:`_local_labels`.
       A Spark job per round over a few thousand rows is nothing but
@@ -332,13 +362,7 @@ def components(pairs: DataFrame, caller: str = "components") -> DataFrame:
     - Above the gate (the scale path): alternating large-star /
       small-star rounds (Kiveris et al. 2014) contract the edge set
       on the cluster in O(log n) rounds whatever the diameter, until
-      it stops changing; labels are read off the star forest.
-
-    The pair count that picks the regime is observed while the pair
-    set is checkpointed, so the test costs no job and ships nothing
-    to the driver when the graph is too large to finish there."""
-    from pyspark.sql import Observation
-
+      it stops changing; labels are read off the star forest."""
     # ONE materialization of the caller's pair stage (r16 optimization
     # pass, guide §2.4 "don't compute things twice"): the node frame
     # used to re-derive from `pairs` under a lazy persist, so the
@@ -347,19 +371,13 @@ def components(pairs: DataFrame, caller: str = "components") -> DataFrame:
     # label join first touched it. Checkpointing the deduped pair set
     # up front makes every later consumer — the node set, the round-1
     # edge set — a cheap re-read of the materialized 8-byte-pair rows.
-    size = Observation()
-    P = (
-        pairs.select("u", "v")
-        .distinct()
-        .observe(size, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
+    P, local = _checkpoint_pairs(pairs.select("u", "v").distinct())
     spark, typ = P.sparkSession, P.schema["u"].dataType
-    if size.get["n"] <= _LOCAL_CC_MAX_PAIRS:
+    if local is not None:
         schema = T.StructType(
             [T.StructField("node", typ), T.StructField("cluster_id", typ)]
         )
-        return spark.createDataFrame(_local_labels(P.toArrow()), schema)
+        return spark.createDataFrame(_local_labels(local), schema)
     nodes = P.select(F.col("u").alias("node")).union(
         P.select(F.col("v").alias("node"))
     ).distinct()
@@ -652,6 +670,45 @@ ORACLE["q_graph_adamic_adar"] = (
 LP_ITERS = 3
 
 
+def _local_labelprop(t: "pyarrow.Table") -> "pyarrow.Table":
+    """``q_graph_labelprop``'s rounds and community report over the
+    undirected edge table ``t``, computed on the driver in NumPy.
+
+    Round 1 is min(neighbour), as in the Spark rounds. Each later
+    round counts the (node, label) votes with one ``np.unique`` over
+    ``node * n + label`` keys, which come back sorted by node, then
+    label; a stable sort on descending count keeps, first in each
+    node's run, its most frequent label with ties to the smallest."""
+    import numpy as np
+    import pyarrow as pa
+
+    typ = t.schema.field(0).type
+    ids, src, dst = _compact(t)
+    n = len(ids)
+    lbl = np.full(n, n)
+    np.minimum.at(lbl, src, dst)
+    for _ in range(LP_ITERS - 1):
+        keys, c = np.unique(src * n + lbl[dst], return_counts=True)
+        node, vote = np.divmod(keys, n)
+        best = np.lexsort((-c, node))
+        # every node has a neighbour, so node k's run starts at the
+        # k-th distinct value of the sorted node column
+        first = best[np.searchsorted(node[best], np.arange(n))]
+        lbl = vote[first]
+    order = np.argsort(lbl, kind="stable")
+    comm, start, size = np.unique(
+        lbl[order], return_index=True, return_counts=True
+    )
+    return pa.table(
+        {
+            "community": pa.array(ids[comm], typ),
+            "n_members": pa.array(size, pa.int64()),
+            "min_member": pa.array(ids[order[start]], typ),
+            "max_member": pa.array(ids[order[start + size - 1]], typ),
+        }
+    )
+
+
 def q_graph_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection by synchronous label propagation over the
     co-purchase graph (Raghavan 2007, made deterministic): every
@@ -663,30 +720,38 @@ def q_graph_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a community-size report (the curation consumer wants
     cluster sizes and a representative, not the raw labeling).
 
-    Per round: one equi-join of the directed edge list against the
-    |V|-row label frame + one hash agg on (node, label) + one
-    per-node argmax window — the iterate-as-dataflow shape. Label
-    state is O(|V|), join is O(|E|) per round, and the window
-    partitions by node over the aggregated votes frame (bounded by
-    Σ deg distinct labels, never |V|²). At 100 TB the label frame is
-    the thing to co-partition with the edge list (both hash on node
-    id) so rounds reuse one shuffle layout. Unrolled 3 rounds keep
-    the plan linear in rounds; a longer loop would localCheckpoint
-    per round (the ``q_geo_dbscan`` lesson)."""
-    from pyspark.sql import Window
-
-    from ..cacheutil import cache_latest
-
-    e = _edges(spark, sf_dir)
-    # the directed edge list feeds every round AND the node-frame
-    # init — materialize it once (slot cache: one live copy per
-    # session however many times the query runs) instead of
-    # recomputing the lineitem self-join per round
-    d = cache_latest(
-        "labelprop_edges",
-        e.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-            e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-        ),
+    Two regimes, one answer, picked by :func:`_checkpoint_pairs` on
+    the checkpointed undirected edge set:
+    - At most ``_LOCAL_MAX_PAIRS`` edges (every fixture; sf0.1 has
+      ~1.2M): the edges are collected through Arrow and
+      :func:`_local_labelprop` runs the rounds and the report in
+      NumPy. A Spark job per round over a graph this size is mostly
+      scheduling cost.
+    - Above the gate (the scale path): per round one equi-join of
+      the directed edge list against the |V|-row label frame, one
+      hash agg on (node, label) and a per-node struct-max hash agg
+      for the argmax. Label state is O(|V|), the join O(|E|) per
+      round; at 100 TB the label frame is the thing to co-partition
+      with the edge list (both hash on node id) so rounds reuse one
+      shuffle layout. Unrolled 3 rounds keep the plan linear in
+      rounds; a longer loop would localCheckpoint per round (the
+      ``q_geo_dbscan`` lesson)."""
+    E, local = _checkpoint_pairs(_edges(spark, sf_dir))
+    if local is not None:
+        typ = E.schema["a"].dataType
+        schema = T.StructType(
+            [
+                T.StructField("community", typ),
+                T.StructField("n_members", T.LongType(), False),
+                T.StructField("min_member", typ),
+                T.StructField("max_member", typ),
+            ]
+        )
+        return spark.createDataFrame(_local_labelprop(local), schema)
+    # the directed edge list feeds the round-1 agg and every later
+    # round's join: both re-read the checkpointed edge set
+    d = E.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
+        E.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
     # Round 1 computed in closed form (r17 optimization pass, guide
     # §1.1 first-principles): labels_0 is the identity map and d is a
@@ -920,6 +985,42 @@ _PPR_SEEDS = 4
 _PPR_ITERS = 3
 
 
+def _local_ppr(t: "pyarrow.Table") -> "pyarrow.Table":
+    """``q_graph_ppr``'s rounds and top-20 report over the undirected
+    edge table ``t``, computed on the driver in NumPy with the Spark
+    rounds' exact int64 floor divisions.
+
+    A round's rank set is what the Spark rounds' full join keeps:
+    every node some ranked node reaches, plus the seeds — a reached
+    node whose contributions floor to 0 still ranks, at 0."""
+    import numpy as np
+    import pyarrow as pa
+
+    typ = t.schema.field(0).type
+    ids, src, dst = _compact(t)
+    n = len(ids)
+    deg = np.bincount(src, minlength=n)
+    seed = np.zeros(n, bool)
+    seed[np.argsort(-deg, kind="stable")[:_PPR_SEEDS]] = True
+    seed_base = PR_SCALE // _PPR_SEEDS
+    teleport = (15 * seed_base) // 100
+    ranked, r = seed, np.where(seed, seed_base, 0)
+    for _ in range(_PPR_ITERS):
+        live = ranked[src]
+        s, d = src[live], dst[live]
+        spread = np.zeros(n, np.int64)
+        np.add.at(spread, d, r[s] // deg[s])
+        reached = np.zeros(n, bool)
+        reached[d] = True
+        r = np.where(reached, 85 * spread // 100, 0) + np.where(seed, teleport, 0)
+        ranked = reached | seed
+    nodes = np.flatnonzero(ranked)
+    top = nodes[np.lexsort((nodes, -r[nodes]))][:20]
+    return pa.table(
+        {"node": pa.array(ids[top], typ), "rank_fp": pa.array(r[top], pa.int64())}
+    )
+
+
 def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank (Page et al. 1999 §6; the seeded
     variant behind related-item / account-suggestion features) over
@@ -932,20 +1033,30 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine, no float convergence drift), ``_PPR_ITERS``
     unrolled rounds, top-20 by rank for a bounded report.
 
-    Scale: per round one equi-join (ranks are (node, BIGINT) rows —
-    never adjacency lists) + one hash agg; the seed frame is a
-    broadcast-size literal. Symmetric edges from the one distinct
-    co-order pair scan shared with q_graph_degree; oracle rounds are
-    MATERIALIZED CTEs (the k-core sf1 lesson: DuckDB inlines plain
-    CTEs per reference — 3^rounds blowup)."""
-    e = _edges(spark, sf_dir)
-    # eager localCheckpoint (the k-core lesson): sym feeds the degree
-    # agg, the seed top-k AND every round's join — uncheckpointed,
-    # the distinct co-order self-join re-executes 5+ times (measured
-    # 7.8 s -> 4.5 s best-of-3 at sf0.1)
-    sym = e.union(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint()
+    Two regimes, one answer, picked by :func:`_checkpoint_pairs` on
+    the checkpointed undirected edge set:
+    - At most ``_LOCAL_MAX_PAIRS`` edges (every fixture; sf0.1 has
+      ~1.2M): the edges are collected through Arrow and
+      :func:`_local_ppr` runs the rounds and the top-k in NumPy.
+    - Above the gate (the scale path): per round one equi-join
+      (ranks are (node, BIGINT) rows — never adjacency lists) + one
+      hash agg; the seed frame is a broadcast-size literal. The
+      rounds stay lazy and run as one job with the top-k.
+
+    Oracle rounds are MATERIALIZED CTEs (the k-core sf1 lesson:
+    DuckDB inlines plain CTEs per reference — 3^rounds blowup)."""
+    E, local = _checkpoint_pairs(_edges(spark, sf_dir))
+    if local is not None:
+        schema = T.StructType(
+            [
+                T.StructField("node", E.schema["a"].dataType),
+                T.StructField("rank_fp", T.LongType(), False),
+            ]
+        )
+        return spark.createDataFrame(_local_ppr(local), schema)
+    # sym feeds the degree agg, the seed top-k AND every round's
+    # join: all of them re-read the checkpointed edge set
+    sym = E.union(E.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     # loop-invariant frames materialized ONCE (r16 optimization pass,
     # guide §2.4): seeds (4 rows) and the degree-annotated edge list

@@ -37,6 +37,9 @@ def get_spark(app_name: str = "twitter-etl-spark", master: str | None = None) ->
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
+        # no `\r[Stage N: ...]` bars on the console: they share a
+        # terminal line with whatever the caller prints next
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.warehouse.dir", "/tmp/twitter_etl_spark_warehouse")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
