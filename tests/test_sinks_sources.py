@@ -327,6 +327,61 @@ def test_incremental_rollup_equals_full_aggregate(spark, tmp_path):
     assert v1_n == docs.filter(F.col("doc_id") % 3 == 0).count()
 
 
+def test_rollup_null_chars_and_state_schema(spark, tmp_path):
+    """Three update_rollup batches equal the one-shot aggregate when
+    one ``lang`` has only null ``n_chars`` (``n`` counts those rows,
+    sum/min/max skip the nulls), and the published snapshot's schema
+    is the ``STATE_SCHEMA`` that later batches read it with."""
+    from pyspark.sql import functions as F
+
+    from twitter_etl_spark.rollup import STATE_SCHEMA, update_rollup
+    from twitter_etl_spark.sinks import read_version
+
+    schema = "lang string, n_chars bigint"
+    batches = [
+        [("es", 3), ("es", 5), ("en", 4), ("xx", None)],
+        [("xx", None), ("es", None), ("es", 11)],
+        [("en", 2), ("xx", None), ("fr", 7)],
+    ]
+    d = str(tmp_path / "rollup")
+    for rows in batches:
+        update_rollup(spark, d, spark.createDataFrame(rows, schema))
+    snapshot = read_version(spark, d)
+    assert snapshot.schema == STATE_SCHEMA
+    want = (
+        spark.createDataFrame([r for b in batches for r in b], schema)
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("n_chars").alias("s"),
+            F.min("n_chars").alias("mn"),
+            F.max("n_chars").alias("mx"),
+        )
+    )
+    assert sorted(map(tuple, snapshot.collect())) == sorted(map(tuple, want.collect()))
+    assert ("xx", 3, None, None, None) in map(tuple, snapshot.collect())
+
+
+def test_key_index_schema_matches_constant(spark, tmp_path):
+    """The global-dedup key index is read with ``KEY_INDEX_SCHEMA``;
+    what the stream writes must have exactly that schema."""
+    import json
+
+    from twitter_etl_spark.streaming.microbatch import (
+        KEY_INDEX_SCHEMA,
+        key_index_path,
+        run_microbatch_pipeline_global_dedup,
+    )
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    doc = {"doc_id": 1, "text": "hola mundo", "lang": "es", "source": "s", "n_chars": 10}
+    (landing / "stream_1.json").write_text(json.dumps(doc) + "\n")
+    sink = str(tmp_path / "sink")
+    run_microbatch_pipeline_global_dedup(spark, str(landing), sink, str(tmp_path / "ckpt"))
+    assert spark.read.parquet(key_index_path(sink)).schema == KEY_INDEX_SCHEMA
+
+
 def test_compact_sorted_tightens_rowgroup_stats(spark, tmp_path):
     """Clustered compaction must (a) preserve rows, (b) produce
     row-group min/max stats for the sort column that are near-

@@ -5,6 +5,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from collections import Counter
 
 import pytest
 
@@ -505,6 +506,122 @@ def test_global_dedup_all_seen_batch_writes_nothing(spark):
     assert {(r["tweet_id"], r["content"]) for r in out.collect()} == expected
     assert spark.read.parquet(index).count() == len(expected)
     assert spark.conf.get(_CACHED_PARTITIONING) == "false"
+
+
+def _two_file_landing():
+    """Two landing files for the stream-vs-batch pins. Ids grow across
+    files (``doc_id`` is a load-order surrogate). File 1: contents that
+    clean alike with untied ids (3 < 5) and with tied ids (two rows of
+    id 7), a null ``text`` and ``en`` rows; file 2: a repost of file 1's
+    content, a second null ``text``, a content new to the stream and an
+    ``en`` row."""
+    base = tempfile.mkdtemp()
+    landing = os.path.join(base, "landing")
+
+    def null_text(i):
+        return {**_doc(i, ""), "text": None, "n_chars": None}
+
+    _write_landing_file(
+        landing,
+        "stream_1.json",
+        [
+            _doc(5, "Hola   Mundo"),
+            _doc(3, "hola mundo @alguien"),
+            _doc(7, "Frase  Repetida"),
+            _doc(7, "frase repetida"),
+            null_text(9),
+            _doc(4, "hola mundo", lang="en"),
+            _doc(6, "some english words", lang="en"),
+        ],
+    )
+    _write_landing_file(
+        landing,
+        "stream_2.json",
+        [
+            _doc(12, "HOLA mundo http://t.co/x"),
+            null_text(13),
+            _doc(14, "frase nueva aqui"),
+            _doc(15, "frase nueva aqui", lang="en"),
+        ],
+    )
+    # the file source takes files in modification-time order
+    first = os.path.join(landing, "stream_1.json")
+    os.utime(first, (os.path.getmtime(first) - 10,) * 2)
+    return base, landing
+
+
+def _rows(df) -> Counter:
+    return Counter(tuple(r) for r in df.select("tweet_id", "lang", "content", "source").collect())
+
+
+def test_stream_equals_batch_transform(spark):
+    """Stream == batch: the append sink holds the per-file batch
+    transform of each landed file, and the global-dedup sink holds
+    keep-first across both files (the repost and the second null
+    ``content`` dropped), which is also the batch flagship's output."""
+    from twitter_etl_spark.pipeline import transform_documents
+    from twitter_etl_spark.sources import read_ndjson
+    from twitter_etl_spark.streaming.microbatch import (
+        run_microbatch_pipeline_global_dedup,
+        transform_batch,
+    )
+
+    base, landing = _two_file_landing()
+    files = sorted(os.path.join(landing, f) for f in os.listdir(landing))
+    want_append = Counter()
+    for f in files:
+        want_append += _rows(transform_batch(read_ndjson(spark, f)))
+    want_dedup = _rows(transform_batch(read_ndjson(spark, landing)))
+    assert want_dedup == _rows(transform_documents(read_ndjson(spark, landing)))
+    assert want_append != want_dedup  # the repost tells the two apart
+
+    sink, dedup = os.path.join(base, "sink"), os.path.join(base, "dedup")
+    run_microbatch_pipeline(spark, landing, sink, os.path.join(base, "ck_sink"))
+    run_microbatch_pipeline_global_dedup(spark, landing, dedup, os.path.join(base, "ck_dedup"))
+    assert _rows(spark.read.parquet(sink)) == want_append
+    assert _rows(spark.read.parquet(dedup)) == want_dedup
+
+
+def test_append_guard_writes_nothing_for_unkept_rows(spark):
+    """The empty-chunk guard (``main.R:75-78, 114``) on the filtered
+    rows: an ``en``-only file adds no parquet file, and neither does
+    an ``es`` file whose content matches no ``keys`` term."""
+    base = tempfile.mkdtemp()
+    landing, sink, ckpt = (os.path.join(base, n) for n in ("landing", "sink", "ckpt"))
+    keys = ("spark", "merge")
+    _write_landing_file(
+        landing, "stream_1.json", [_doc(1, "spark rapido"), _doc(2, "sin terminos")]
+    )
+    run_microbatch_pipeline(spark, landing, sink, ckpt, keys=keys)
+    files = _part_files(sink)
+    assert len(files) == 1
+    _write_landing_file(
+        landing, "stream_2.json", [_doc(3, "spark merge english", lang="en")]
+    )
+    _write_landing_file(
+        landing, "stream_3.json", [_doc(4, "nada que ver"), _doc(5, "otra cosa")]
+    )
+    q = run_microbatch_pipeline(spark, landing, sink, ckpt, keys=keys)
+    assert len(q.recentProgress) == 2
+    assert _part_files(sink) == files
+    assert [r["content"] for r in spark.read.parquet(sink).collect()] == ["spark rapido"]
+
+
+def test_append_and_rollup_jobs_per_batch(spark):
+    """Each micro-batch runs only the Spark jobs its output needs: the
+    append stream a limit-1 guard, the keep-first shuffle and the
+    write; the rollup stream its guard, one merge shuffle and the
+    publish (the previous version is read with its known schema)."""
+    from twitter_etl_spark.streaming.microbatch import run_streaming_rollup
+
+    base, landing = _two_file_landing()
+    tracker = spark.sparkContext.statusTracker()
+    for name, run in (("sink", run_microbatch_pipeline), ("rollup", run_streaming_rollup)):
+        out = os.path.join(base, name)
+        q = run(spark, landing, out, os.path.join(base, f"ck_{name}"))
+        batches = len(q.recentProgress)
+        assert batches == 2
+        assert len(tracker.getJobIdsForGroup(str(q.runId))) <= 3 * batches, name
 
 
 def test_stateful_running_totals_across_batches(spark):

@@ -16,7 +16,8 @@ live Twitter HTTP stream per chunk (``main.R:60-66``); here each
 chunk drains whatever has landed in the NDJSON landing directory
 (the reference itself spools the socket to such files before
 parsing). ``--keys`` plays the track-keyword role as an OR-of-terms
-text filter applied on top of the flagship transform.
+filter on the cleaned content, applied with the language filter
+before each batch's keep-first.
 
 Usage::
 
@@ -29,8 +30,6 @@ from __future__ import annotations
 
 import argparse
 import sys
-
-from pyspark.sql import functions as F
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -64,7 +63,7 @@ def main(argv: list[str] | None = None) -> int:
     from .session import get_spark
     from .sinks import create_table_if_absent
     from .sources import ensure_landing_dir
-    from .streaming.microbatch import run_microbatch_pipeline, transform_batch
+    from .streaming.microbatch import run_microbatch_pipeline
 
     spark = get_spark("twitter-etl-cli")
 
@@ -77,16 +76,6 @@ def main(argv: list[str] | None = None) -> int:
         ensure_landing_dir(opt.raw_data_dir)
         keys = [k.strip() for k in opt.keys.split(",") if k.strip()]
 
-        def transform(df):
-            out = transform_batch(df)
-            if keys:  # OR-of-terms track filter (main.R:133-136)
-                cond = None
-                for k in keys:
-                    c = F.col("content").contains(k)
-                    cond = c if cond is None else (cond | c)
-                out = out.filter(cond)
-            return out
-
         if opt.stream_chunks <= 0:
             # live mode: unbounded processingTime stream at the
             # reference's per-chunk cadence (main.R:165-170)
@@ -97,7 +86,7 @@ def main(argv: list[str] | None = None) -> int:
                 opt.checkpoint_dir,
                 bounded=False,
                 cadence_seconds=opt.stream_timeout,
-                transform=transform,
+                keys=keys,
             )
             print(f"live stream started (every {opt.stream_timeout}s) "
                   f"-> {opt.db_file}; Ctrl-C to stop")
@@ -112,7 +101,7 @@ def main(argv: list[str] | None = None) -> int:
                     opt.db_file,
                     opt.checkpoint_dir,
                     bounded=True,
-                    transform=transform,
+                    keys=keys,
                 )
             print(f"ran {opt.stream_chunks} chunk(s) -> {opt.db_file}")
     return 0

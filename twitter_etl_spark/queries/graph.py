@@ -1040,7 +1040,8 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
       :func:`_local_ppr` runs the rounds and the top-k in NumPy.
     - Above the gate (the scale path): per round one equi-join
       (ranks are (node, BIGINT) rows — never adjacency lists) + one
-      hash agg; the seed frame is a broadcast-size literal. The
+      hash agg; the seed frame joins un-hinted (Spark cannot build
+      a broadcast side for the FULL outer teleport join). The
       rounds stay lazy and run as one job with the top-k.
 
     Oracle rounds are MATERIALIZED CTEs (the k-core sf1 lesson:
@@ -1061,7 +1062,7 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # loop-invariant frames materialized ONCE (r16 optimization pass,
     # guide §2.4): seeds (4 rows) and the degree-annotated edge list
     # esrc used to be lazy, so EVERY round's contrib join re-ran the
-    # degree agg + edge join (and every round's teleport broadcast
+    # degree agg + edge join (and every round's teleport join
     # re-ran the degree top-k) against the checkpointed sym — 3x the
     # work for identical results.
     seeds = (
@@ -1097,7 +1098,7 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("85 * sum(c) div 100").alias("s")
         )
         ranks = (
-            spread.join(F.broadcast(seeds.withColumn("t", F.lit(teleport))), "node", "full")
+            spread.join(seeds.withColumn("t", F.lit(teleport)), "node", "full")
             .select(
                 "node",
                 (

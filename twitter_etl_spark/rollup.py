@@ -23,19 +23,29 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .sinks import publish_version, read_version
 
-#: partial-state columns (the mergeable monoid) for the lang rollup.
-_STATE_COLS = ("lang", "n", "s", "mn", "mx")
+#: partial-state schema (the mergeable monoid) of the lang rollup;
+#: previous versions are read with it, not inferred.
+STATE_SCHEMA = T.StructType(
+    [T.StructField("lang", T.StringType())]
+    + [T.StructField(c, T.LongType()) for c in ("n", "s", "mn", "mx")]
+)
 
 
-def _partial(batch: DataFrame) -> DataFrame:
-    return batch.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("n_chars").alias("s"),
-        F.min("n_chars").alias("mn"),
-        F.max("n_chars").alias("mx"),
+def _singletons(batch: DataFrame) -> DataFrame:
+    """Each batch row as a one-row partial state: ``n = 1`` (rows with
+    a null ``n_chars`` count too), ``s = mn = mx = n_chars`` (nulls,
+    which sum/min/max skip)."""
+    c = F.col("n_chars").cast("bigint")
+    return batch.select(
+        F.col("lang"),
+        F.lit(1).cast("bigint").alias("n"),
+        c.alias("s"),
+        c.alias("mn"),
+        c.alias("mx"),
     )
 
 
@@ -53,15 +63,14 @@ def update_rollup(
 ) -> int:
     """Absorb one new document partition into the materialized
     rollup; returns the published version. First call bootstraps.
-    Cost: one partial agg over the BATCH plus a merge over
-    |rollup| + |batch partials| rows — history is never re-read."""
-    fresh = _partial(new_docs)
+    Cost: one merge (one shuffle) over |rollup| + |batch| rows, the
+    batch rows entering as singleton partials that the map-side
+    partial aggregate collapses — history is never re-read."""
+    state = _singletons(new_docs)
     if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
-        prev = read_version(spark, rollup_dir).select(*_STATE_COLS)
-        state = prev.unionByName(fresh.select(*_STATE_COLS))
-    else:
-        state = fresh
-    return publish_version(_merge(state).select(*_STATE_COLS), rollup_dir)
+        prev = read_version(spark, rollup_dir, schema=STATE_SCHEMA)
+        state = prev.unionByName(state)
+    return publish_version(_merge(state), rollup_dir)
 
 
 def read_rollup(spark: SparkSession, rollup_dir: str, version: int | None = None) -> DataFrame:

@@ -354,13 +354,21 @@ def publish_version(df: DataFrame, table_dir: str) -> int:
     return nxt
 
 
-def read_version(spark: SparkSession, table_dir: str, version: int | None = None) -> DataFrame:
+def read_version(
+    spark: SparkSession,
+    table_dir: str,
+    version: int | None = None,
+    schema: T.StructType | None = None,
+) -> DataFrame:
     """Read a published snapshot: the ``_LATEST`` pointer by
-    default, or any retained ``v=N`` for time travel."""
+    default, or any retained ``v=N`` for time travel. A caller that
+    knows the snapshot's ``schema`` passes it, which skips the footer
+    read (and its job) of schema inference."""
     if version is None:
         with open(os.path.join(table_dir, "_LATEST")) as f:
             version = int(f.read().strip())
-    return spark.read.parquet(os.path.join(table_dir, f"v={version}"))
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(os.path.join(table_dir, f"v={version}"))
 
 
 def vacuum_versions(table_dir: str, keep: int = 2) -> list[int]:

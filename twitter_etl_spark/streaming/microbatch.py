@@ -9,6 +9,20 @@ bounded slice of the stream to a landing file (``get_tweets``,
 Spark-native shape: the landing directory IS the stream.
 ``readStream.json`` (explicit schema) + ``foreachBatch`` running
 the same transform used in batch, appending to a parquet sink.
+The transform is split in two so a micro-batch runs only the Spark
+jobs its output needs:
+
+- the per-document projection (:func:`project_docs`: rename,
+  clean ``content`` on ``es`` rows) is applied ONCE to the
+  streaming frame, so its expression tree (the regex chain) is
+  built and analysed once per stream, not once per batch;
+- each batch runs only the ``lang = 'es'`` filter (plus the
+  ``--keys`` track filter) and the keep-first window
+  (:func:`keep_first_batch`). The filter stays in the batch: the
+  sources then count every landed row, and ``batch_df`` is a
+  ``LogicalRDD``, so the ``when`` in the projection is what keeps
+  the regex chain off non-``es`` rows.
+
 Differences, both deliberate upgrades:
 
 - checkpointing makes the loop effectively-once (the reference
@@ -24,33 +38,63 @@ family, not a sink property.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import os
+from collections.abc import Sequence
+from functools import reduce
+from operator import or_
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..cleaning import clean_chain
 from ..sources import DOCUMENTS_SCHEMA, read_ndjson_stream
+
+#: schema of the key-digest index (:func:`key_index_path`): one
+#: ``md5(content)`` hex string per sink row; read with it, not inferred.
+KEY_INDEX_SCHEMA = T.StructType([T.StructField("digest", T.StringType())])
+
+
+def project_docs(df: DataFrame) -> DataFrame:
+    """The per-document half of the transform (``main.R:83-103``):
+    project + rename, and ``content`` = the cleaning chain on
+    ``lang = 'es'`` rows (null on the rest, which the batch filter
+    drops before keep-first)."""
+    return df.select(
+        F.col("doc_id").alias("tweet_id"),
+        F.col("lang"),
+        F.when(F.col("lang") == "es", clean_chain(F.col("text"))).alias("content"),
+        F.col("source"),
+    )
+
+
+def keep_first_batch(df: DataFrame) -> DataFrame:
+    """Keep-first dedup within the batch (``main.R:105``): the row
+    with the smallest ``tweet_id`` per ``content``."""
+    w = Window.partitionBy("content").orderBy("tweet_id")
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
+def _kept_rows(keys: Sequence[str] = ()) -> Column:
+    """The batch filter: ``lang = 'es'``, and with track ``keys``
+    (``main.R:133-136``) an OR of ``content`` containing each term.
+    The terms test only ``content``, keep-first's partition key, so
+    filtering before keep-first keeps the rows filtering after would."""
+    cond = F.col("lang") == "es"
+    if keys:
+        cond = cond & reduce(or_, (F.col("content").contains(k) for k in keys))
+    return cond
 
 
 def transform_batch(df: DataFrame) -> DataFrame:
     """Per-batch transform — identical semantics to the batch
     flagship (filter -> project/rename -> clean -> keep-first dedup
-    within the batch, reference ``main.R:74-109``)."""
-    cleaned = (
-        df.filter(F.col("lang") == "es")
-        .select(
-            F.col("doc_id").alias("tweet_id"),
-            F.col("lang"),
-            F.col("text").alias("content"),
-            F.col("source"),
-        )
-        .withColumn("content", clean_chain(F.col("content")))
-    )
-    w = Window.partitionBy("content").orderBy("tweet_id")
-    return (
-        cleaned.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    within the batch, reference ``main.R:74-109``), over raw docs."""
+    return keep_first_batch(project_docs(df).filter(_kept_rows()))
 
 
 def key_index_path(sink_path: str) -> str:
@@ -73,11 +117,14 @@ def run_microbatch_pipeline_global_dedup(
 
     Scale design: the sink itself is NEVER re-read. Each batch
     anti-joins against a compact **key-digest index**
-    (:func:`key_index_path`) holding one 16-byte ``md5(content)``
-    per sink row, and appends the surviving digests to the index —
-    per-batch read cost follows the number of *keys ever written*
-    (a few GB at 100 TB of documents), not sink size, and the scan
-    is a single fixed-width column.
+    (:func:`key_index_path`) holding one ``md5(content)`` per sink
+    row (the 32-char hex string of ``F.md5``, :data:`KEY_INDEX_SCHEMA`),
+    and appends the surviving digests to the index — per-batch read
+    cost follows the number of *keys ever written* (a few GB at
+    100 TB of documents), not sink size, and the scan is a single
+    column. The digest is computed in the stream's projection; the
+    anti-join is null-safe, so a null ``content`` is deduplicated
+    across batches as keep-first does within one.
 
     Per-batch shape: one anti-join, one cached survivor set, then one
     append to the sink and one to the index — one file each at a few
@@ -105,21 +152,22 @@ def run_microbatch_pipeline_global_dedup(
     idempotent sink (dynamic-overwrite partition per batch id, or a
     table format with txn commit) would close the remaining window.
     """
-    stream = read_ndjson_stream(spark, landing_dir, DOCUMENTS_SCHEMA)
+    stream = project_docs(
+        read_ndjson_stream(spark, landing_dir, DOCUMENTS_SCHEMA)
+    ).withColumn("__digest", F.md5(F.col("content")))
     index_path = key_index_path(sink_path)
+    es = _kept_rows()
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
         batch_df.sparkSession.conf.set(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
         )
-        out = transform_batch(batch_df).withColumn(
-            "__digest", F.md5(F.col("content"))
-        )
+        out = keep_first_batch(batch_df.filter(es))
         if os.path.exists(index_path):
-            seen = spark.read.parquet(index_path)
-            out = out.join(seen, out["__digest"] == seen["digest"], "left_anti")
+            seen = spark.read.schema(KEY_INDEX_SCHEMA).parquet(index_path)
+            out = out.join(
+                seen, out["__digest"].eqNullSafe(seen["digest"]), "left_anti"
+            )
         out = out.persist()  # one anti-join, two writes
         try:
             if out.isEmpty():
@@ -196,20 +244,27 @@ def run_microbatch_pipeline(
     bounded: bool = True,
     cadence_seconds: int = 60,
     await_seconds: int | None = None,
-    transform=transform_batch,
+    keys: Sequence[str] = (),
 ):
     """Run the ETL loop. ``bounded=True`` = the reference's
     N-chunks-then-exit run (``availableNow``); otherwise a live
-    ``processingTime`` cadence. ``transform`` defaults to the
-    reference-parity batch transform. Returns the StreamingQuery
-    (already awaited when bounded)."""
-    stream = read_ndjson_stream(spark, landing_dir, DOCUMENTS_SCHEMA)
+    ``processingTime`` cadence. ``keys`` are the reference's track
+    terms (``main.R:133-136``): a row is kept only if its cleaned
+    ``content`` contains one of them. Returns the StreamingQuery
+    (already awaited when bounded).
+
+    Per batch: the empty-chunk guard (``main.R:75-78, 114``) is a
+    limit-1 scan of the filtered rows, exact because keep-first of a
+    non-empty frame is never empty; the write then runs the
+    keep-first window once."""
+    stream = project_docs(read_ndjson_stream(spark, landing_dir, DOCUMENTS_SCHEMA))
+    kept = _kept_rows(keys)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = transform(batch_df)
-        if out.isEmpty():  # reference empty-chunk guard (main.R:75-78, 114)
+        rows = batch_df.filter(kept)
+        if rows.isEmpty():
             return
-        out.write.mode("append").parquet(sink_path)
+        keep_first_batch(rows).write.mode("append").parquet(sink_path)
 
     writer = (
         stream.writeStream.foreachBatch(_sink)
