@@ -470,15 +470,14 @@ def test_interval_join_is_equi_on_bins_not_bnlj(spark):
     )
 
 
-@pytest.mark.slow
-def test_plan_snapshot_matches(spark):
-    """Plan-drift tripwire (r8): every query's physical-plan operator
-    fingerprint must match the committed PLAN_SNAPSHOT.json. A
-    mismatch means a plan silently changed shape (a broadcast decayed
-    to sort-merge, an exchange appeared, a Python stage crept in) —
-    exactly the class of regression the r7 bench-drift investigation
-    could not distinguish from host noise. If the change is
-    intentional, regenerate with ``python tools/gen_plan_snapshot.py``
+def _assert_plan_snapshot(spark, names) -> None:
+    """Plan-drift tripwire (r8): each named query's physical-plan
+    operator fingerprint must match the committed PLAN_SNAPSHOT.json.
+    A mismatch means a plan silently changed shape (a broadcast
+    decayed to sort-merge, an exchange appeared, a Python stage crept
+    in) — exactly the class of regression the r7 bench-drift
+    investigation could not distinguish from host noise. If the change
+    is intentional, regenerate with ``python tools/gen_plan_snapshot.py``
     and commit the diff alongside the code."""
     import json
     import os
@@ -492,7 +491,7 @@ def test_plan_snapshot_matches(spark):
 
     committed = json.load(open(os.path.join(root, "PLAN_SNAPSHOT.json")))
     drift = {}
-    for name in sorted(ALL_QUERIES):
+    for name in sorted(names):
         if name in gps.SKIP:
             continue
         # match the generator's cold-form convention: a slot warmed
@@ -508,6 +507,29 @@ def test_plan_snapshot_matches(spark):
     assert not drift, (
         "plan fingerprints drifted (regenerate tools/gen_plan_snapshot.py "
         f"if intentional): {json.dumps(drift, indent=1)[:2000]}"
+    )
+
+
+@pytest.mark.slow
+def test_plan_snapshot_matches(spark):
+    """Every registered query matches its committed plan fingerprint."""
+    _assert_plan_snapshot(spark, ALL_QUERIES)
+
+
+def test_plan_snapshot_matches_heavy_queries(spark):
+    """Default-tier subset of the snapshot check: the iterative graph,
+    star-component, LSH codegen and mapInArrow PQ queries."""
+    _assert_plan_snapshot(
+        spark,
+        (
+            "q_graph_labelprop",
+            "q_graph_ppr",
+            "q_er_cluster",
+            "q_geo_dbscan",
+            "q_sim_lsh_rhp",
+            "q_sim_lsh_rhp_strict",
+            "q_sim_ann_pq_trained",
+        ),
     )
 
 

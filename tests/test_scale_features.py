@@ -242,7 +242,7 @@ def test_drift_rollup_replay_is_idempotent(spark):
     the last batch id — and an older id — returns the current version
     unchanged and leaves the PSI report identical; a genuinely NEW id
     still absorbs."""
-    from twitter_etl_spark import rollup
+    from twitter_etl_spark import rollup, sinks
     from twitter_etl_spark.queries.dq import q_drift_psi
 
     base = tempfile.mkdtemp()
@@ -254,7 +254,7 @@ def test_drift_rollup_replay_is_idempotent(spark):
         for i in range(3)
     ]
     assert versions == [1, 2, 3]
-    assert rollup.drift_batch_hwm(rdir) == 2
+    assert sinks.batch_hwm(rdir) == 2
 
     report = {tuple(r) for r in rollup.read_drift_psi(spark, rdir).collect()}
     # replay the last batch and an older batch: skipped, version frozen
@@ -273,7 +273,7 @@ def test_drift_rollup_replay_is_idempotent(spark):
         )
         == 4
     )
-    assert rollup.drift_batch_hwm(rdir) == 3
+    assert sinks.batch_hwm(rdir) == 3
 
 
 def test_phash_rollup_absorb_and_probe_match_one_shot(spark):

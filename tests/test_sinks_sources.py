@@ -331,7 +331,9 @@ def test_rollup_null_chars_and_state_schema(spark, tmp_path):
     """Three update_rollup batches equal the one-shot aggregate when
     one ``lang`` has only null ``n_chars`` (``n`` counts those rows,
     sum/min/max skip the nulls), and the published snapshot's schema
-    is the ``STATE_SCHEMA`` that later batches read it with."""
+    is the ``STATE_SCHEMA`` that later batches read it with. With a
+    stream ``batch_id``, a repeated id returns the current version and
+    absorbs nothing; a new id absorbs."""
     from pyspark.sql import functions as F
 
     from twitter_etl_spark.rollup import STATE_SCHEMA, update_rollup
@@ -360,6 +362,11 @@ def test_rollup_null_chars_and_state_schema(spark, tmp_path):
     )
     assert sorted(map(tuple, snapshot.collect())) == sorted(map(tuple, want.collect()))
     assert ("xx", 3, None, None, None) in map(tuple, snapshot.collect())
+
+    d = str(tmp_path / "replayed")
+    batch = spark.createDataFrame(batches[0], schema)
+    assert [update_rollup(spark, d, batch, batch_id=i) for i in (0, 0, 1)] == [1, 1, 2]
+    assert ("es", 4, 16, 3, 5) in map(tuple, read_version(spark, d).collect())
 
 
 def test_key_index_schema_matches_constant(spark, tmp_path):

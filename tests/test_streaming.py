@@ -609,14 +609,22 @@ def test_append_guard_writes_nothing_for_unkept_rows(spark):
 
 def test_append_and_rollup_jobs_per_batch(spark):
     """Each micro-batch runs only the Spark jobs its output needs: the
-    append stream a limit-1 guard, the keep-first shuffle and the
-    write; the rollup stream its guard, one merge shuffle and the
-    publish (the previous version is read with its known schema)."""
-    from twitter_etl_spark.streaming.microbatch import run_streaming_rollup
+    append and idempotent streams a limit-1 guard, the keep-first
+    shuffle and the write; the rollup stream its guard, one merge
+    shuffle and the publish (the previous version is read with its
+    known schema)."""
+    from twitter_etl_spark.streaming.microbatch import (
+        run_microbatch_pipeline_idempotent,
+        run_streaming_rollup,
+    )
 
     base, landing = _two_file_landing()
     tracker = spark.sparkContext.statusTracker()
-    for name, run in (("sink", run_microbatch_pipeline), ("rollup", run_streaming_rollup)):
+    for name, run in (
+        ("sink", run_microbatch_pipeline),
+        ("idempotent", run_microbatch_pipeline_idempotent),
+        ("rollup", run_streaming_rollup),
+    ):
         out = os.path.join(base, name)
         q = run(spark, landing, out, os.path.join(base, f"ck_{name}"))
         batches = len(q.recentProgress)
@@ -991,6 +999,34 @@ def test_streaming_rollup_maintenance(spark):
     for lang in want:
         for c in ("n_docs", "sum_chars", "min_chars", "max_chars", "avg_chars"):
             assert got[lang][c] == want[lang][c], (lang, c)
+
+
+def test_streaming_rollup_skips_replayed_batch(spark):
+    """A batch the checkpoint replays (its commit file lost after the
+    rollup published it) is not absorbed twice: the replay publishes
+    no version and the rows stay those of one pass over both files."""
+    from twitter_etl_spark.rollup import read_rollup
+    from twitter_etl_spark.streaming.microbatch import run_streaming_rollup
+
+    base = tempfile.mkdtemp()
+    landing, rollup, ckpt = (os.path.join(base, n) for n in ("landing", "rollup", "ckpt"))
+    _write_landing_file(landing, "stream_1.json", [_doc(1, "a" * 10)])
+    _write_landing_file(landing, "stream_2.json", [_doc(2, "b" * 10)])
+    first = os.path.join(landing, "stream_1.json")
+    os.utime(first, (os.path.getmtime(first) - 10,) * 2)
+
+    def state():
+        versions = sorted(p for p in os.listdir(rollup) if p.startswith("v="))
+        return versions, sorted(map(tuple, read_rollup(spark, rollup).collect()))
+
+    run_streaming_rollup(spark, landing, rollup, ckpt)
+    before = state()
+    assert before == (["v=1", "v=2"], [("es", 2, 20, 10, 10, 10.0)])
+    for name in ("1", ".1.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    q = run_streaming_rollup(spark, landing, rollup, ckpt)
+    assert [p.batchId for p in q.recentProgress] == [1]  # batch 1 replayed
+    assert state() == before
 
 
 def test_python_streaming_datasource_offsets_exactly_once(spark):

@@ -15,17 +15,31 @@ state schema is the PARTIAL form (n, s, mn, mx) — finalized metrics
 like avg are derived at read time, because avg partials don't merge
 but (sum, count) do (the standard mergeable-state rule: store the
 monoid, not the quotient).
+
+Every ``update_*`` function below is the same absorb step with its
+own batch partial and merge: :func:`_absorb` is that one rule (skip a
+replayed stream batch, union the batch partials with the previous
+version, merge, publish). The snapshot layout (``_LATEST``, ``v=N``,
+the batch high-water mark) is ``sinks``' alone.
+
+Replay safety under foreachBatch's at-least-once delivery: the
+plain-sum rollups (lang stats, drift, softdedup) take the stream's
+``batch_id`` and skip ids at or below the published high-water mark;
+the rest merge idempotently (max, or, distinct, min-by survivor), so
+re-absorbing a batch leaves the state as it was. The histogram and
+window-digest rollups are neither, and no stream feeds them.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .sinks import publish_version, read_version
+from .sinks import batch_hwm, latest_version, publish_version, read_version
 
 #: partial-state schema (the mergeable monoid) of the lang rollup;
 #: previous versions are read with it, not inferred.
@@ -49,28 +63,64 @@ def _singletons(batch: DataFrame) -> DataFrame:
     )
 
 
-def _merge(state: DataFrame) -> DataFrame:
-    return state.groupBy("lang").agg(
-        F.sum("n").alias("n"),
-        F.sum("s").alias("s"),
-        F.min("mn").alias("mn"),
-        F.max("mx").alias("mx"),
-    )
+def _absorb(
+    spark: SparkSession,
+    rollup_dir: str,
+    fresh: DataFrame,
+    cols: Sequence[str],
+    merge: Callable[[DataFrame], DataFrame],
+    batch_id: int | None = None,
+    schema: T.StructType | None = None,
+) -> int:
+    """Absorb one batch's partial state ``fresh`` into the rollup at
+    ``rollup_dir``; returns the published version. A stream
+    ``batch_id`` at or below the published high-water mark is a
+    replay: the current version is returned unchanged. Otherwise the
+    partials (``cols``) are unioned with the previous version, if
+    any (read with ``schema`` when given), and ``merge`` of that
+    union is published, stamped with ``batch_id``. The first batch
+    merges into the empty state, so ``merge`` must be idempotent on
+    already-keyed partials."""
+    latest = latest_version(rollup_dir)
+    if latest is not None and batch_id is not None:
+        if batch_id <= batch_hwm(rollup_dir, latest):
+            return latest
+    state = fresh.select(*cols)
+    if latest is not None:
+        prev = read_version(spark, rollup_dir, latest, schema=schema)
+        state = prev.select(*cols).unionByName(state)
+    return publish_version(merge(state).select(*cols), rollup_dir, batch_id)
+
+
+def _by(keys, *aggs):
+    """A merge that groups the state by ``keys`` and applies ``aggs``."""
+    return lambda state: state.groupBy(*keys).agg(*aggs)
 
 
 def update_rollup(
-    spark: SparkSession, rollup_dir: str, new_docs: DataFrame
+    spark: SparkSession,
+    rollup_dir: str,
+    new_docs: DataFrame,
+    batch_id: int | None = None,
 ) -> int:
     """Absorb one new document partition into the materialized
     rollup; returns the published version. First call bootstraps.
     Cost: one merge (one shuffle) over |rollup| + |batch| rows, the
     batch rows entering as singleton partials that the map-side
-    partial aggregate collapses — history is never re-read."""
-    state = _singletons(new_docs)
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
-        prev = read_version(spark, rollup_dir, schema=STATE_SCHEMA)
-        state = prev.unionByName(state)
-    return publish_version(_merge(state), rollup_dir)
+    partial aggregate collapses — history is never re-read. Sums do
+    not survive a replay, so a stream passes its foreachBatch
+    ``batch_id`` and replayed ids are skipped."""
+    merge = _by(
+        ("lang",),
+        F.sum("n").alias("n"),
+        F.sum("s").alias("s"),
+        F.min("mn").alias("mn"),
+        F.max("mx").alias("mx"),
+    )
+    return _absorb(
+        spark, rollup_dir, _singletons(new_docs), STATE_SCHEMA.names, merge,
+        batch_id, STATE_SCHEMA,
+    )
 
 
 def read_rollup(spark: SparkSession, rollup_dir: str, version: int | None = None) -> DataFrame:
@@ -114,17 +164,9 @@ def update_distinct_rollup(
     rollup; returns the published version. Merge = bitmap_or_agg per
     (event_type, bucket) — one hash agg over |rollup| + |batch
     partials| rows, history never re-read."""
-    fresh = _distinct_partial(new_events)
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
-        prev = read_version(spark, rollup_dir).select(*_DISTINCT_STATE_COLS)
-        state = prev.unionByName(fresh.select(*_DISTINCT_STATE_COLS))
-    else:
-        state = fresh
-    merged = state.groupBy("event_type", "bucket").agg(
-        F.expr("bitmap_or_agg(bm)").alias("bm")
-    )
-    return publish_version(
-        merged.select(*_DISTINCT_STATE_COLS), rollup_dir
+    return _absorb(
+        spark, rollup_dir, _distinct_partial(new_events), _DISTINCT_STATE_COLS,
+        _by(("event_type", "bucket"), F.expr("bitmap_or_agg(bm)").alias("bm")),
     )
 
 
@@ -155,15 +197,10 @@ def update_hll_rollup(
     fresh = new_events.groupBy("event_type").agg(
         F.expr("hll_sketch_agg(user_id)").alias("hll")
     )
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
-        prev = read_version(spark, rollup_dir).select(*_HLL_STATE_COLS)
-        state = prev.unionByName(fresh.select(*_HLL_STATE_COLS))
-    else:
-        state = fresh
-    merged = state.groupBy("event_type").agg(
-        F.expr("hll_union_agg(hll)").alias("hll")
+    return _absorb(
+        spark, rollup_dir, fresh, _HLL_STATE_COLS,
+        _by(("event_type",), F.expr("hll_union_agg(hll)").alias("hll")),
     )
-    return publish_version(merged.select(*_HLL_STATE_COLS), rollup_dir)
 
 
 def read_hll_rollup(
@@ -201,15 +238,10 @@ def update_register_rollup(
         .groupBy("event_type", "j")
         .agg(F.max("rho").alias("m_j"))
     )
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
-        prev = read_version(spark, rollup_dir).select(*_REG_STATE_COLS)
-        state = prev.unionByName(fresh.select(*_REG_STATE_COLS))
-    else:
-        state = fresh
-    merged = state.groupBy("event_type", "j").agg(
-        F.max("m_j").alias("m_j")
+    return _absorb(
+        spark, rollup_dir, fresh, _REG_STATE_COLS,
+        _by(("event_type", "j"), F.max("m_j").alias("m_j")),
     )
-    return publish_version(merged.select(*_REG_STATE_COLS), rollup_dir)
 
 
 def read_register_rollup(
@@ -248,14 +280,10 @@ def update_bloom_rollup(
         .distinct()
         .select(ks, "digest")
         .select(_bloom_pos(F.col("j"), F.col("digest")).alias("pos"))
-        .distinct()
     )
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
-        prev = read_version(spark, rollup_dir).select(*_BLOOM_STATE_COLS)
-        state = prev.unionByName(fresh).distinct()
-    else:
-        state = fresh
-    return publish_version(state.select(*_BLOOM_STATE_COLS), rollup_dir)
+    return _absorb(
+        spark, rollup_dir, fresh, _BLOOM_STATE_COLS, DataFrame.distinct
+    )
 
 
 def probe_bloom_rollup(
@@ -311,19 +339,17 @@ def update_kmv_rollup(
 
     from .queries.sketches import _KMV_K, kmv_hash_rows
 
-    fresh = kmv_hash_rows(new_events, "user_id", "event_type")
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
-        prev = read_version(spark, rollup_dir).select(*_KMV_STATE_COLS)
-        state = prev.unionByName(fresh.select(*_KMV_STATE_COLS)).distinct()
-    else:
-        state = fresh
     w = Window.partitionBy("event_type").orderBy("h")
-    trimmed = (
-        state.select(*_KMV_STATE_COLS, F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= _KMV_K)
-        .select(*_KMV_STATE_COLS)
-    )
-    return publish_version(trimmed, rollup_dir)
+
+    def k_min(state: DataFrame) -> DataFrame:
+        return (
+            state.distinct()
+            .select(*_KMV_STATE_COLS, F.row_number().over(w).alias("rn"))
+            .filter(F.col("rn") <= _KMV_K)
+        )
+
+    fresh = kmv_hash_rows(new_events, "user_id", "event_type")
+    return _absorb(spark, rollup_dir, fresh, _KMV_STATE_COLS, k_min)
 
 
 def read_kmv_rollup(
@@ -372,13 +398,10 @@ def update_minhash_rollup(
     MinHash index; returns the published version. Absorbing
     shingles/digests the BATCH only and unions it with
     |rollup state| rows — history text is never re-read."""
-    fresh = _minhash_doc_rows(new_docs)
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
-        prev = read_version(spark, rollup_dir).select(*_MINHASH_STATE_COLS)
-        state = prev.unionByName(fresh.select(*_MINHASH_STATE_COLS)).distinct()
-    else:
-        state = fresh
-    return publish_version(state.select(*_MINHASH_STATE_COLS), rollup_dir)
+    return _absorb(
+        spark, rollup_dir, _minhash_doc_rows(new_docs), _MINHASH_STATE_COLS,
+        DataFrame.distinct,
+    )
 
 
 def minhash_rollup_pairs(
@@ -542,15 +565,10 @@ def update_semdedup_rollup(
     persistent semantic-dedup state; returns the published version.
     History embeddings are never re-read — the union is |rollup
     state| + |batch| rows of already-normed vectors."""
-    fresh = _semdedup_vec_rows(new_embeddings)
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
-        prev = read_version(spark, rollup_dir).select(*_SEMDEDUP_STATE_COLS)
-        state = _keep_min_by_digest(
-            prev.unionByName(fresh.select(*_SEMDEDUP_STATE_COLS))
-        )
-    else:
-        state = fresh
-    return publish_version(state.select(*_SEMDEDUP_STATE_COLS), rollup_dir)
+    return _absorb(
+        spark, rollup_dir, _semdedup_vec_rows(new_embeddings),
+        _SEMDEDUP_STATE_COLS, _keep_min_by_digest,
+    )
 
 
 def semdedup_rollup_keeplist(
@@ -652,13 +670,10 @@ def update_semdedup_adaptive_rollup(
     (no HWM needed, the deterministic-key class), and the survivor
     stays batch-order-independent even if a vec_id were ever
     re-absorbed with a changed embedding."""
-    fresh = _sema_vec_rows(new_embeddings)
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
-        prev = read_version(spark, rollup_dir).select(*_SEMA_STATE_COLS)
-        state = _keep_min_by_digest(prev.unionByName(fresh))
-    else:
-        state = fresh
-    return publish_version(state.select(*_SEMA_STATE_COLS), rollup_dir)
+    return _absorb(
+        spark, rollup_dir, _sema_vec_rows(new_embeddings), _SEMA_STATE_COLS,
+        _keep_min_by_digest,
+    )
 
 
 def _sema_cells(st: DataFrame) -> DataFrame:
@@ -812,16 +827,10 @@ def update_histogram_rollup(
     fresh = new_customers.groupBy(
         "c_mktsegment", bucket.alias("bucket")
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
-        prev = read_version(spark, rollup_dir).select(*_HIST_STATE_COLS)
-        state = (
-            prev.unionByName(fresh.select(*_HIST_STATE_COLS))
-            .groupBy("c_mktsegment", "bucket")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-    else:
-        state = fresh
-    return publish_version(state.select(*_HIST_STATE_COLS), rollup_dir)
+    return _absorb(
+        spark, rollup_dir, fresh, _HIST_STATE_COLS,
+        _by(("c_mktsegment", "bucket"), F.sum("cnt").alias("cnt")),
+    )
 
 
 def read_histogram_percentiles(
@@ -912,26 +921,21 @@ def update_windowdigest_rollup(
     returns the published version. State is one 32-byte-keyed row
     per DISTINCT window content — boilerplate collapses map-side
     exactly as in the one-shot query's digest agg."""
-    fresh = _window_state(new_docs)
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
-        prev = read_version(spark, rollup_dir).select(*_SUBSTR_STATE_COLS)
-        state = (
-            prev.unionByName(fresh.select(*_SUBSTR_STATE_COLS))
-            .groupBy("h")
+
+    def first_and_count(state: DataFrame) -> DataFrame:
+        return (
+            state.groupBy("h")
             .agg(
                 F.min(F.struct("first_doc", "first_i")).alias("f"),
                 F.sum("n_occ").alias("n_occ"),
             )
-            .select(
-                "h",
-                F.col("f.first_doc").alias("first_doc"),
-                F.col("f.first_i").alias("first_i"),
-                "n_occ",
-            )
+            .select("h", "f.first_doc", "f.first_i", "n_occ")
         )
-    else:
-        state = fresh
-    return publish_version(state.select(*_SUBSTR_STATE_COLS), rollup_dir)
+
+    return _absorb(
+        spark, rollup_dir, _window_state(new_docs), _SUBSTR_STATE_COLS,
+        first_and_count,
+    )
 
 
 def probe_substring_cut(
@@ -976,52 +980,6 @@ def probe_substring_cut(
 _DRIFT_STATE_COLS = ("feature", "bin", "n_ref", "n_cur")
 
 
-def batch_hwm(rollup_dir: str, version: int | None = None) -> int:
-    """The batch-id high-water mark recorded alongside a published
-    rollup version (−1 if none / pre-hwm state) — dir-generic: any
-    plain-sum rollup that must survive foreachBatch replay uses the
-    same ``_BATCH_HWM_v=N`` sidecar convention. Resolves the
-    ``_LATEST`` pointer first, so the hwm read is consistent with
-    whatever snapshot a concurrent reader sees."""
-    if version is None:
-        latest = os.path.join(rollup_dir, "_LATEST")
-        if not os.path.exists(latest):
-            return -1
-        with open(latest) as f:
-            version = int(f.read().strip())
-    p = os.path.join(rollup_dir, f"_BATCH_HWM_v={version}")
-    if not os.path.exists(p):
-        return -1
-    with open(p) as f:
-        return int(f.read().strip())
-
-
-#: drift's original name for the hwm reader (kept: pinned by the
-#: r12 streaming tests; the sidecar convention is now shared)
-drift_batch_hwm = batch_hwm
-
-
-def _publish_with_hwm(state, cols, rollup_dir: str, batch_id: int) -> int:
-    """Publish a rollup version with its replay high-water mark
-    stamped BEFORE the ``_LATEST`` flip (the flip stays the single
-    commit point — a crash between data write and flip leaves the
-    old pointer + old mark, and the replay correctly re-absorbs
-    into a fresh version). Single-writer, like every rollup here."""
-    versions = [
-        int(p.split("=")[1])
-        for p in os.listdir(rollup_dir)
-        if p.startswith("v=")
-    ] if os.path.isdir(rollup_dir) else []
-    nxt = max(versions, default=0) + 1
-    new_hwm = max(batch_id, batch_hwm(rollup_dir))
-    os.makedirs(rollup_dir, exist_ok=True)
-    with open(os.path.join(rollup_dir, f"_BATCH_HWM_v={nxt}"), "w") as f:
-        f.write(str(new_hwm))
-    got = publish_version(state.select(*cols), rollup_dir)
-    assert got == nxt, f"single-writer violated: {got} != {nxt}"
-    return got
-
-
 def update_drift_rollup(
     spark: SparkSession,
     rollup_dir: str,
@@ -1034,34 +992,22 @@ def update_drift_rollup(
     The plain-sum monoid is NOT idempotent, and Structured Streaming
     foreachBatch is at-least-once into non-transactional sinks — a
     replayed batch would double-count (ADVICE r12). Passing the
-    foreachBatch ``batch_id`` engages a high-water mark: ids ≤ the
-    mark recorded with the current published version are skipped
-    (returning that version unchanged). The mark file is written for
-    the next version BEFORE the ``_LATEST`` flip, so the pointer
-    flip stays the single commit point: a crash between data write
-    and flip leaves the old pointer + old mark, and the replay
-    correctly re-absorbs into a fresh version. Single-writer, like
-    every rollup here (one foreachBatch executes at a time)."""
+    foreachBatch ``batch_id`` engages the high-water mark of
+    :func:`_absorb`: ids ≤ the mark published with the current
+    version are skipped (returning that version unchanged).
+    Single-writer, like every rollup here (one foreachBatch executes
+    at a time)."""
     from .queries.dq import drift_counts
 
-    have_state = os.path.exists(os.path.join(rollup_dir, "_LATEST"))
-    if batch_id is not None and have_state:
-        if batch_id <= drift_batch_hwm(rollup_dir):
-            with open(os.path.join(rollup_dir, "_LATEST")) as f:
-                return int(f.read().strip())
-    fresh = drift_counts(new_docs)
-    if have_state:
-        prev = read_version(spark, rollup_dir).select(*_DRIFT_STATE_COLS)
-        state = (
-            prev.unionByName(fresh.select(*_DRIFT_STATE_COLS))
-            .groupBy("feature", "bin")
-            .agg(F.sum("n_ref").alias("n_ref"), F.sum("n_cur").alias("n_cur"))
-        )
-    else:
-        state = fresh
-    if batch_id is not None:
-        return _publish_with_hwm(state, _DRIFT_STATE_COLS, rollup_dir, batch_id)
-    return publish_version(state.select(*_DRIFT_STATE_COLS), rollup_dir)
+    return _absorb(
+        spark, rollup_dir, drift_counts(new_docs), _DRIFT_STATE_COLS,
+        _by(
+            ("feature", "bin"),
+            F.sum("n_ref").alias("n_ref"),
+            F.sum("n_cur").alias("n_cur"),
+        ),
+        batch_id,
+    )
 
 
 def read_drift_psi(
@@ -1125,17 +1071,10 @@ def update_phash_rollup(
     dedupes on doc_id keeping either identical row)."""
     from .queries.multimodal_q import phash_frame
 
-    fresh = phash_frame(new_docs)
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
-        prev = read_version(spark, rollup_dir).select(*_PHASH_STATE_COLS)
-        state = (
-            prev.unionByName(fresh.select(*_PHASH_STATE_COLS))
-            .groupBy("doc_id")
-            .agg(F.min("phash").alias("phash"))
-        )
-    else:
-        state = fresh
-    return publish_version(state.select(*_PHASH_STATE_COLS), rollup_dir)
+    return _absorb(
+        spark, rollup_dir, phash_frame(new_docs), _PHASH_STATE_COLS,
+        _by(("doc_id",), F.min("phash").alias("phash")),
+    )
 
 
 def phash_rollup_pairs(
@@ -1203,24 +1142,11 @@ def update_softdedup_rollup(
     foreachBatch ``batch_id``, replayed ids ≤ the published
     high-water mark are skipped (plain-sum monoid + at-least-once
     delivery = double count otherwise)."""
-    have_state = os.path.exists(os.path.join(rollup_dir, "_LATEST"))
-    if batch_id is not None and have_state:
-        if batch_id <= batch_hwm(rollup_dir):
-            with open(os.path.join(rollup_dir, "_LATEST")) as f:
-                return int(f.read().strip())
-    fresh = _soft_partial(new_docs)
-    if have_state:
-        prev = read_version(spark, rollup_dir).select(*_SOFT_STATE_COLS)
-        state = (
-            prev.unionByName(fresh.select(*_SOFT_STATE_COLS))
-            .groupBy("norm_digest")
-            .agg(F.sum("n").alias("n"), F.min("mn").alias("mn"))
-        )
-    else:
-        state = fresh
-    if batch_id is not None:
-        return _publish_with_hwm(state, _SOFT_STATE_COLS, rollup_dir, batch_id)
-    return publish_version(state.select(*_SOFT_STATE_COLS), rollup_dir)
+    return _absorb(
+        spark, rollup_dir, _soft_partial(new_docs), _SOFT_STATE_COLS,
+        _by(("norm_digest",), F.sum("n").alias("n"), F.min("mn").alias("mn")),
+        batch_id,
+    )
 
 
 def read_softdedup_weights(
@@ -1285,34 +1211,28 @@ def update_sample_rollup(
     q_sample_weighted."""
     from pyspark.sql import Window
 
-    fresh = _sample_keys(new_docs).orderBy(
-        F.asc_nulls_last("sample_key"), F.asc_nulls_last("doc_id")
-    ).limit(k)
-    if os.path.exists(os.path.join(rollup_dir, "_LATEST")):
-        prev = read_version(spark, rollup_dir).select(*_SAMPLE_STATE_COLS)
-        # Deterministic survivor per doc_id (r13 advice): if a doc_id
-        # is re-absorbed with CHANGED text, its sample_key differs
-        # between the persisted row and the fresh one —
-        # dropDuplicates would keep an arbitrary copy and silently
-        # break the chunks ≡ one-shot pin. Keep the MIN sample_key
-        # (nulls last, lang as final tiebreak), which is also what
-        # the one-shot query over the union would rank by. ≤ 2k rows
-        # here, so the window is trivial.
-        wd = Window.partitionBy("doc_id").orderBy(
-            F.asc_nulls_last("sample_key"), F.asc_nulls_last("lang")
-        )
-        state = (
-            prev.unionByName(fresh.select(*_SAMPLE_STATE_COLS))
-            .withColumn("_rn", F.row_number().over(wd))
+    rank = (F.asc_nulls_last("sample_key"), F.asc_nulls_last("doc_id"))
+    # Deterministic survivor per doc_id (r13 advice): if a doc_id is
+    # re-absorbed with CHANGED text, its sample_key differs between
+    # the persisted row and the fresh one — dropDuplicates would keep
+    # an arbitrary copy and silently break the chunks ≡ one-shot pin.
+    # Keep the MIN sample_key (nulls last, lang as final tiebreak),
+    # which is also what the one-shot query over the union would rank
+    # by. ≤ 2k rows here, so the window is trivial.
+    wd = Window.partitionBy("doc_id").orderBy(
+        F.asc_nulls_last("sample_key"), F.asc_nulls_last("lang")
+    )
+
+    def top_k(state: DataFrame) -> DataFrame:
+        return (
+            state.withColumn("_rn", F.row_number().over(wd))
             .filter(F.col("_rn") == 1)
-            .drop("_rn")
+            .orderBy(*rank)
+            .limit(k)
         )
-    else:
-        state = fresh
-    winners = state.orderBy(
-        F.asc_nulls_last("sample_key"), F.asc_nulls_last("doc_id")
-    ).limit(k)
-    return publish_version(winners.select(*_SAMPLE_STATE_COLS), rollup_dir)
+
+    fresh = _sample_keys(new_docs).orderBy(*rank).limit(k)
+    return _absorb(spark, rollup_dir, fresh, _SAMPLE_STATE_COLS, top_k)
 
 
 def read_sample_rollup(
@@ -1431,38 +1351,21 @@ def update_curation_rollup(
         .cast("bigint")
         .alias("q_ok"),
     )
-    if os.path.exists(os.path.join(docs_dir, "_LATEST")):
-        prev = read_version(spark, docs_dir).select(*_CURATION_STATE_COLS)
-        state = (
-            prev.unionByName(keeper)
-            .groupBy("norm_digest")
-            .agg(
-                F.min_by(
-                    F.struct("doc_id", "q_ok"), F.col("doc_id")
-                ).alias("w")
-            )
-            .select(
-                "norm_digest",
-                F.col("w.doc_id").alias("doc_id"),
-                F.col("w.q_ok").alias("q_ok"),
-            )
+
+    def min_keeper(state: DataFrame) -> DataFrame:
+        return (
+            state.groupBy("norm_digest")
+            .agg(F.min_by(F.struct("doc_id", "q_ok"), F.col("doc_id")).alias("w"))
+            .select("norm_digest", "w.doc_id", "w.q_ok")
         )
-    else:
-        state = keeper
-    v = publish_version(state.select(*_CURATION_STATE_COLS), docs_dir)
+
+    v = _absorb(spark, docs_dir, keeper, _CURATION_STATE_COLS, min_keeper)
     if neardup:
-        nd_dir = os.path.join(rollup_dir, "nd")
-        fresh_nd = _curation_nd_rows(kb)
-        if os.path.exists(os.path.join(nd_dir, "_LATEST")):
-            prev_nd = read_version(spark, nd_dir).select(
-                *_CURATION_ND_STATE_COLS
-            )
-            nd_state = prev_nd.unionByName(fresh_nd).dropDuplicates(
-                ["norm_digest"]
-            )
-        else:
-            nd_state = fresh_nd
-        publish_version(nd_state.select(*_CURATION_ND_STATE_COLS), nd_dir)
+        _absorb(
+            spark, os.path.join(rollup_dir, "nd"), _curation_nd_rows(kb),
+            _CURATION_ND_STATE_COLS,
+            lambda state: state.dropDuplicates(["norm_digest"]),
+        )
     if new_embeddings is not None:
         update_semdedup_adaptive_rollup(
             spark, os.path.join(rollup_dir, "sem"), new_embeddings
@@ -1559,10 +1462,10 @@ def curation_keeplist(
     docs_dir = os.path.join(rollup_dir, "docs")
     st = read_version(spark, docs_dir, version).select(*_CURATION_STATE_COLS)
     nd_dir = os.path.join(rollup_dir, "nd")
-    if os.path.exists(os.path.join(nd_dir, "_LATEST")):
+    if latest_version(nd_dir) is not None:
         st = _apply_neardup_keeplist(spark, st, nd_dir)
     sem_dir = os.path.join(rollup_dir, "sem")
-    if os.path.exists(os.path.join(sem_dir, "_LATEST")):
+    if latest_version(sem_dir) is not None:
         sk = semdedup_adaptive_keeplist(spark, sem_dir).select(
             F.col("vec_id").alias("__sk_id"), F.col("kept").alias("__sk_kept")
         )

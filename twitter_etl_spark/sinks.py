@@ -329,7 +329,37 @@ def drop_partitions_older_than(
     return dropped
 
 
-def publish_version(df: DataFrame, table_dir: str) -> int:
+def latest_version(table_dir: str) -> int | None:
+    """The version the ``_LATEST`` pointer names, or None before the
+    first :func:`publish_version`."""
+    try:
+        with open(os.path.join(table_dir, "_LATEST")) as f:
+            return int(f.read().strip())
+    except FileNotFoundError:
+        return None
+
+
+def batch_hwm(table_dir: str, version: int | None = None) -> int:
+    """The stream batch-id high-water mark stamped with a published
+    version (``_LATEST`` by default), or -1 when none was stamped.
+    Resolves the pointer first, so the mark read is consistent with
+    the snapshot a concurrent reader sees."""
+    if version is None:
+        version = latest_version(table_dir)
+    try:
+        with open(os.path.join(table_dir, f"_BATCH_HWM_v={version}")) as f:
+            return int(f.read().strip())
+    except FileNotFoundError:
+        return -1
+
+
+def _versions(table_dir: str) -> list[int]:
+    return [int(p.split("=")[1]) for p in os.listdir(table_dir) if p.startswith("v=")]
+
+
+def publish_version(
+    df: DataFrame, table_dir: str, batch_id: int | None = None
+) -> int:
     """Atomic snapshot publish on plain parquet: write the full new
     snapshot to an immutable ``v=N`` directory, then flip a
     ``_LATEST`` pointer file with ``os.replace`` (atomic on POSIX).
@@ -338,15 +368,19 @@ def publish_version(df: DataFrame, table_dir: str) -> int:
     failure mode ADVICE flagged in the in-place compaction swap).
     Old versions stay readable (time travel) until explicitly
     dropped; this is the pointer-flip core of what table formats'
-    commit protocols do. Returns the published version number."""
+    commit protocols do. Returns the published version number.
+
+    A stream's ``batch_id`` is stamped as ``_BATCH_HWM_v=N`` (the
+    larger of it and the current mark) BEFORE the flip, so the flip
+    stays the single commit point: a crash before it leaves the old
+    pointer and the old mark, and the replayed batch is absorbed
+    again into a fresh version. Single writer per ``table_dir``."""
     os.makedirs(table_dir, exist_ok=True)
-    versions = [
-        int(p.split("=")[1])
-        for p in os.listdir(table_dir)
-        if p.startswith("v=")
-    ]
-    nxt = max(versions, default=0) + 1
+    nxt = max(_versions(table_dir), default=0) + 1
     df.write.mode("errorifexists").parquet(os.path.join(table_dir, f"v={nxt}"))
+    if batch_id is not None:
+        with open(os.path.join(table_dir, f"_BATCH_HWM_v={nxt}"), "w") as f:
+            f.write(str(max(batch_id, batch_hwm(table_dir))))
     tmp = os.path.join(table_dir, "_LATEST.tmp")
     with open(tmp, "w") as f:
         f.write(str(nxt))
@@ -365,8 +399,9 @@ def read_version(
     knows the snapshot's ``schema`` passes it, which skips the footer
     read (and its job) of schema inference."""
     if version is None:
-        with open(os.path.join(table_dir, "_LATEST")) as f:
-            version = int(f.read().strip())
+        version = latest_version(table_dir)
+        if version is None:
+            raise FileNotFoundError(os.path.join(table_dir, "_LATEST"))
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(os.path.join(table_dir, f"v={version}"))
 
@@ -383,14 +418,8 @@ def vacuum_versions(table_dir: str, keep: int = 2) -> list[int]:
     like ``compact_table``."""
     import shutil
 
-    with open(os.path.join(table_dir, "_LATEST")) as f:
-        latest = int(f.read().strip())
-    versions = sorted(
-        int(p.split("=")[1])
-        for p in os.listdir(table_dir)
-        if p.startswith("v=")
-    )
-    keep_set = set(versions[-keep:]) | {latest}
+    versions = sorted(_versions(table_dir))
+    keep_set = set(versions[-keep:]) | {latest_version(table_dir)}
     dropped = []
     for v in versions:
         if v not in keep_set:

@@ -97,6 +97,30 @@ def transform_batch(df: DataFrame) -> DataFrame:
     return keep_first_batch(project_docs(df).filter(_kept_rows()))
 
 
+def _start(
+    stream: DataFrame,
+    sink,
+    checkpoint_dir: str,
+    await_seconds: int | None,
+    cadence_seconds: int | None = None,
+):
+    """Start ``stream`` into the foreachBatch ``sink``. With no
+    ``cadence_seconds`` the query runs ``availableNow`` (drain what has
+    landed, then stop) and is awaited for up to ``await_seconds``;
+    otherwise it runs live on a ``processingTime`` cadence and is
+    returned at once."""
+    writer = (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if cadence_seconds is not None:
+        return writer.trigger(processingTime=f"{cadence_seconds} seconds").start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination(await_seconds)
+    return q
+
+
 def key_index_path(sink_path: str) -> str:
     """Location of the compact key-digest index maintained next to a
     global-dedup sink."""
@@ -179,18 +203,10 @@ def run_microbatch_pipeline_global_dedup(
         finally:
             out.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(await_seconds)
-    return q
+    return _start(stream, _sink, checkpoint_dir, await_seconds)
 
 
-def idempotent_batch_writer(sink_path: str, transform=transform_batch):
+def idempotent_batch_writer(sink_path: str):
     """foreachBatch writer with **idempotent replay**: each batch
     lands in its own ``batch_id=N`` partition directory with
     overwrite semantics, so a batch replayed after a crash between
@@ -199,13 +215,17 @@ def idempotent_batch_writer(sink_path: str, transform=transform_batch):
     at-least-once checkpoint contract, with plain parquet (the same
     trick a table format's transactional commit generalizes).
     Readers scan the sink root; ``batch_id`` surfaces as a partition
-    column and partition pruning gives per-batch access for free."""
+    column and partition pruning gives per-batch access for free.
+
+    The writer takes raw document rows and runs :func:`transform_batch`.
+    Its empty guard is a limit-1 scan for an ``es`` row, exact because
+    keep-first of a non-empty frame is never empty; the write then
+    runs the transform once."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = transform(batch_df)
-        if out.isEmpty():
+        if batch_df.filter(F.col("lang") == "es").isEmpty():
             return
-        out.write.mode("overwrite").parquet(
+        transform_batch(batch_df).write.mode("overwrite").parquet(
             f"{sink_path.rstrip('/')}/batch_id={batch_id}"
         )
 
@@ -224,15 +244,9 @@ def run_microbatch_pipeline_idempotent(
     the exactly-once-effective upgrade of the reference's
     at-least-once append (``main.R:118``; SURVEY.md §1.3)."""
     stream = read_ndjson_stream(spark, landing_dir, DOCUMENTS_SCHEMA)
-    q = (
-        stream.writeStream.foreachBatch(idempotent_batch_writer(sink_path))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        stream, idempotent_batch_writer(sink_path), checkpoint_dir, await_seconds
     )
-    q.awaitTermination(await_seconds)
-    return q
 
 
 def run_microbatch_pipeline(
@@ -266,17 +280,10 @@ def run_microbatch_pipeline(
             return
         keep_first_batch(rows).write.mode("append").parquet(sink_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start(
+        stream, _sink, checkpoint_dir, await_seconds,
+        None if bounded else cadence_seconds,
     )
-    if bounded:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination(await_seconds)
-    else:
-        q = writer.trigger(processingTime=f"{cadence_seconds} seconds").start()
-    return q
 
 
 def run_streaming_rollup(
@@ -298,12 +305,11 @@ def run_streaming_rollup(
     This is the streaming half of the incremental-rollup story the
     batch side proves (`q_agg_mergeable` merge algebra): the same
     partial-state monoid, driven by the micro-batch loop instead of
-    a backfill job. Replay caveat: update_rollup is NOT idempotent
-    per batch (a replayed batch would double-merge), so at-least-once
-    delivery needs the batch_id recorded with the version — the
-    version number returned per trigger serves as that marker; a
-    production deployment gates on `batch_id > last_merged` exactly
-    like `idempotent_batch_writer` gates its partition overwrite."""
+    a backfill job. Replay gate: the sums are not idempotent, so each
+    trigger passes its ``batch_id``, which is stamped with the
+    published version; a batch the checkpoint replays (crash after
+    the publish, before the commit) has ``batch_id <= last_merged``
+    and is skipped, leaving the rollup as it was."""
     from ..rollup import update_rollup
 
     stream = read_ndjson_stream(spark, landing_dir, DOCUMENTS_SCHEMA)
@@ -311,14 +317,6 @@ def run_streaming_rollup(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        update_rollup(spark, rollup_dir, batch_df)
+        update_rollup(spark, rollup_dir, batch_df, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(await_seconds)
-    return q
+    return _start(stream, _sink, checkpoint_dir, await_seconds)
