@@ -396,10 +396,11 @@ def test_minhash_band_signatures_match_python_reference(spark):
 
     # run the PRODUCTION signature helper on the same docs
     from twitter_etl_spark.queries.corpus import minhash_band_sigs
-    from twitter_etl_spark.queries.dedup import _shingles, _tokens
+    from twitter_etl_spark.cleaning import tokens
+    from twitter_etl_spark.queries.dedup import _shingles
     from twitter_etl_spark.tables import table
 
-    d = table(spark, base, "documents").select("doc_id", _tokens().alias("toks"))
+    d = table(spark, base, "documents").select("doc_id", tokens().alias("toks"))
     sh = d.select("doc_id", _shingles().alias("s")).filter(F.size("s") > 0)
     rows = minhash_band_sigs(sh).collect()
     got = {(r["doc_id"], r["band"]): r["sig"] for r in rows}

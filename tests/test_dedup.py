@@ -470,15 +470,13 @@ def test_substring_cut_conservation_and_idempotence(spark):
 
     from pyspark.sql import functions as F
 
-    from twitter_etl_spark.queries.dedup import (
-        _tokens,
-        q_dedup_substring_cut,
-    )
+    from twitter_etl_spark.cleaning import tokens
+    from twitter_etl_spark.queries.dedup import q_dedup_substring_cut
     from twitter_etl_spark.tables import table
 
     out = q_dedup_substring_cut(spark, SF_ORACLE)
     d = table(spark, SF_ORACLE, "documents").select(
-        "doc_id", F.concat_ws(" ", _tokens()).alias("joined")
+        "doc_id", F.concat_ws(" ", tokens()).alias("joined")
     )
     j = out.join(d, "doc_id")
     rows = j.collect()

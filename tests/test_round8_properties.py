@@ -140,16 +140,16 @@ def _containment_reference(docs):
 def test_containment_matches_bruteforce_reference(spark, docs):
     from pyspark.sql import functions as F
 
+    from twitter_etl_spark.cleaning import tokens
     from twitter_etl_spark.queries.dedup import (
         CONTAIN_MIN,
-        _tokens,
         shingle_intersections_frame,
     )
 
     df = spark.createDataFrame(
         [(i, " ".join(toks)) for i, toks in enumerate(docs)],
         "doc_id long, text string",
-    ).select("doc_id", _tokens().alias("toks"))
+    ).select("doc_id", tokens().alias("toks"))
     inter = shingle_intersections_frame(df)
     c_ab = F.round(F.col("n_inter") / F.col("n_a"), 6)
     c_ba = F.round(F.col("n_inter") / F.col("n_b"), 6)

@@ -1029,6 +1029,86 @@ def test_streaming_rollup_skips_replayed_batch(spark):
     assert state() == before
 
 
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_manager(session, path: str):
+    """The JVM ``CheckpointFileManager`` a stream of ``session`` would
+    use for ``path``."""
+    jvm = session._jvm
+    conf = session._jsparkSession.sessionState().newHadoopConf()
+    managers = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    return managers.CheckpointFileManager.create(jvm.org.apache.hadoop.fs.Path(path), conf)
+
+
+def _assert_no_overwrite_commit(session, manager) -> None:
+    """A second ``createAtomic(p, overwriteIfPossible=False)`` of an
+    existing log file fails on ``close()``, and ``p`` keeps its first
+    bytes."""
+    from py4j.protocol import Py4JJavaError
+
+    path = os.path.join(tempfile.mkdtemp(), "0")
+    p = session._jvm.org.apache.hadoop.fs.Path(path)
+    out = manager.createAtomic(p, False)
+    out.write(bytearray(b"first"))
+    out.close()
+    again = manager.createAtomic(p, False)
+    again.write(bytearray(b"second"))
+    with pytest.raises(Py4JJavaError, match="already exists"):
+        again.close()
+    with open(path, "rb") as f:
+        assert f.read() == b"first"
+
+
+def test_checkpoint_manager_keeps_no_overwrite_commit(spark):
+    """A ``get_spark`` session on a ``file:`` default filesystem writes
+    checkpoints through the FileSystem-based manager, and that manager
+    keeps the log's commit contract, as Spark's default manager does.
+    ``tune_for_session`` leaves Spark's default manager alone."""
+    from twitter_etl_spark.session import LOCAL_CHECKPOINT_MANAGER, tune_for_session
+
+    assert spark.conf.get(_MANAGER_KEY) == LOCAL_CHECKPOINT_MANAGER
+    manager = _checkpoint_manager(spark, tempfile.mkdtemp())
+    assert manager.getClass().getName() == LOCAL_CHECKPOINT_MANAGER
+    _assert_no_overwrite_commit(spark, manager)
+
+    tuned = tune_for_session(spark.newSession())
+    assert tuned.conf.get(_MANAGER_KEY, None) is None
+    default = _checkpoint_manager(tuned, tempfile.mkdtemp())
+    assert default.getClass().getSimpleName() == "FileContextBasedCheckpointFileManager"
+    _assert_no_overwrite_commit(tuned, default)
+
+
+def test_default_manager_checkpoint_resumes_under_local_manager(spark):
+    """A checkpoint written under Spark's default (FileContext) manager
+    resumes under the ``get_spark`` session's manager: only the newly
+    landed file is processed, and the sink holds the per-file transform
+    of both files."""
+    from twitter_etl_spark.sources import read_ndjson
+    from twitter_etl_spark.streaming.microbatch import transform_batch
+
+    old = spark.newSession()  # no checkpoint manager class set
+    assert old.conf.get(_MANAGER_KEY, None) is None
+    base, landing = _two_file_landing()
+    second = os.path.join(landing, "stream_2.json")
+    held = os.path.join(base, "stream_2.json")
+    os.rename(second, held)
+    sink, ckpt = os.path.join(base, "sink"), os.path.join(base, "ckpt")
+    q = run_microbatch_pipeline(old, landing, sink, ckpt)
+    assert [p.batchId for p in q.recentProgress] == [0]
+
+    os.rename(held, second)
+    q = run_microbatch_pipeline(spark, landing, sink, ckpt)
+    assert [p.batchId for p in q.recentProgress] == [1]
+    with open(os.path.join(ckpt, "sources", "0", "1")) as f:
+        logged = [json.loads(line)["path"] for line in f.read().splitlines()[1:]]
+    assert [os.path.basename(p) for p in logged] == ["stream_2.json"]
+    want = Counter()
+    for f in sorted(os.listdir(landing)):
+        want += _rows(transform_batch(read_ndjson(spark, os.path.join(landing, f))))
+    assert _rows(spark.read.parquet(sink)) == want
+
+
 def test_python_streaming_datasource_offsets_exactly_once(spark):
     """The Python streaming connector (Spark 4 simpleStreamReader):
     micro-batches advance by offset with NO duplicated and NO

@@ -68,6 +68,13 @@ def clean_chain(c: Column) -> Column:
     return squish(strip_stopwords(strip_mentions(strip_urls(lower(c)))))
 
 
+def tokens() -> Column:
+    """Whitespace tokens of ``text``: trim, then split on whitespace
+    runs. The tokenizer the query modules and rollups share;
+    :data:`SQL_TOKENS` is its DuckDB twin."""
+    return F.split(F.trim(F.col("text")), r"\s+")
+
+
 # ---------------------------------------------------------------------------
 # DuckDB oracle fragments: f(expr_sql) -> sql string with same semantics.
 # DuckDB regexp_replace needs the 'g' flag to match Spark's replace-all.
@@ -99,3 +106,6 @@ def sql_squish(e: str) -> str:
 
 def sql_clean_chain(e: str) -> str:
     return sql_squish(sql_strip_stopwords(sql_strip_mentions(sql_strip_urls(sql_lower(e)))))
+
+
+SQL_TOKENS = "string_split_regex(trim(text), '\\s+')"

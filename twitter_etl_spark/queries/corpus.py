@@ -32,13 +32,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
+from ..cleaning import tokens
 from ..tables import table
 from .dedup import ORACLE as _DEDUP_ORACLE
 from .dedup import (
     _INCR_RECRAWL_SHIFT,
     _shingles,
     _spread,
-    _tokens,
 )
 
 # A token present in more than this fraction of documents is
@@ -88,7 +88,7 @@ def q_text_corpus_stopwords(spark: SparkSession, sf_dir: str) -> DataFrame:
     row, and broadcast; the scrub is a per-row ``filter`` +
     ``array_join`` — whole-stage codegen, no Python."""
     d = _spread(
-        table(spark, sf_dir, "documents").select("doc_id", _tokens().alias("toks"))
+        table(spark, sf_dir, "documents").select("doc_id", tokens().alias("toks"))
     )
     ex = d.select("doc_id", F.explode(F.array_distinct("toks")).alias("token"))
     dfreq = ex.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
@@ -224,7 +224,7 @@ def q_dedup_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``collect_list`` generation — signatures shuffle ONCE, vs the
     aggregate + broadcast-keep + self-join triple pass."""
     d = _spread(
-        table(spark, sf_dir, "documents").select("doc_id", _tokens().alias("toks"))
+        table(spark, sf_dir, "documents").select("doc_id", tokens().alias("toks"))
     )
     sh = d.select("doc_id", _shingles().alias("s")).filter(F.size("s") > 0)
     return minhash_banded_pairs(sh)
@@ -341,7 +341,7 @@ def q_dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = base.select(
         F.lit(0).alias("role"), "doc_id", "text"
     ).unionAll(batch.select(F.lit(1).alias("role"), "doc_id", "text"))
-    t = _spread(tagged.select("role", "doc_id", _tokens().alias("toks")))
+    t = _spread(tagged.select("role", "doc_id", tokens().alias("toks")))
     sh = t.select("role", "doc_id", _shingles().alias("s")).filter(
         F.size("s") > 0
     )
@@ -706,7 +706,7 @@ def q_dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit string (type-safe: no signed-overflow corner at the top
     bit). Same linear cost: one explode + one 60-vote agg."""
     d = _spread(
-        table(spark, sf_dir, "documents").select("doc_id", _tokens().alias("toks"))
+        table(spark, sf_dir, "documents").select("doc_id", tokens().alias("toks"))
     )
     tok = d.select("doc_id", F.explode("toks").alias("token")).withColumn(
         "h", F.conv(F.substring(F.md5("token"), 1, 15), 16, 10).cast("long")

@@ -18,8 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cleaning import tokens
 from ..tables import table
-from .dedup import _shingles, _tokens
+from .dedup import _shingles
 
 _N = 5  # contamination n-gram width
 
@@ -38,7 +39,7 @@ def q_text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     set (doc_id < 5), with the distinct overlapping-shingle count —
     the decontamination report a filter step would consume."""
     d = table(spark, sf_dir, "documents").select(
-        "doc_id", _tokens().alias("toks")
+        "doc_id", tokens().alias("toks")
     )
     sh = d.select(
         "doc_id", F.explode(_shingles("toks", n=_N)).alias("shingle")

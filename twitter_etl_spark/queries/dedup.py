@@ -22,14 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cleaning import sql_clean_chain, clean_chain
+from ..cleaning import SQL_TOKENS, clean_chain, sql_clean_chain, tokens
 from ..tables import table
-
-_SQL_TOKENS = "string_split_regex(trim(text), '\\s+')"
-
-
-def _tokens():
-    return F.split(F.trim(F.col("text")), r"\s+")
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -103,7 +97,7 @@ def ngram_jaccard_dropped_shingles(
     stop-shingles the df cap drops, with their document frequency.
     Run (and log) this alongside the dedup job — a large dropped set
     means near-dup recall is delegated to the MinHash twin."""
-    d = table(spark, sf_dir, "documents").select("doc_id", _tokens().alias("toks"))
+    d = table(spark, sf_dir, "documents").select("doc_id", tokens().alias("toks"))
     sh = d.select("doc_id", F.explode(_shingles()).alias("shingle"))
     return (
         sh.groupBy("shingle")
@@ -141,7 +135,7 @@ def _shingle_intersections(
     half filtered away — same rewrite as q_dedup_minhash_banded's
     bucket stage."""
     d = _spread(
-        table(spark, sf_dir, "documents").select("doc_id", _tokens().alias("toks"))
+        table(spark, sf_dir, "documents").select("doc_id", tokens().alias("toks"))
     )
     return shingle_intersections_frame(d, max_df, digest_keys)
 
@@ -266,7 +260,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import CountVectorizer, MinHashLSH
 
     d = _spread(
-        table(spark, sf_dir, "documents").select("doc_id", _tokens().alias("toks"))
+        table(spark, sf_dir, "documents").select("doc_id", tokens().alias("toks"))
     )
     sh = d.select("doc_id", _shingles().alias("shingles"))
     cv = CountVectorizer(
@@ -295,7 +289,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-specific). Per-token hashes vote per bit; the fingerprint
     packs the vote signs. One explode + one agg — linear cost."""
     d = _spread(
-        table(spark, sf_dir, "documents").select("doc_id", _tokens().alias("toks"))
+        table(spark, sf_dir, "documents").select("doc_id", tokens().alias("toks"))
     )
     tok = d.select("doc_id", F.explode("toks").alias("token")).withColumn(
         "h", F.xxhash64("token")
@@ -420,7 +414,7 @@ def q_dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     its group collapses map-side to one winner row and AQE splits
     any residual skew. No sort, no window over the corpus."""
     d = table(spark, sf_dir, "documents").select(
-        "doc_id", _tokens().alias("toks")
+        "doc_id", tokens().alias("toks")
     )
     spans = d.select(
         "doc_id",
@@ -607,7 +601,7 @@ def q_dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_dedup_exact_global way)."""
     w = _SUBSTR_TOKENS
     d = table(spark, sf_dir, "documents").select(
-        "doc_id", _tokens().alias("toks")
+        "doc_id", tokens().alias("toks")
     )
     grams = d.where(F.size("toks") >= w).select(
         "doc_id",
@@ -716,7 +710,7 @@ def q_dedup_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode on the Spark side (the oracle derives tokens by explode;
     the two formulations cross-check through the cert)."""
     d = table(spark, sf_dir, "documents").select(
-        "doc_id", _tokens().alias("toks")
+        "doc_id", tokens().alias("toks")
     )
     # the window-digest frame feeds BOTH the first-occurrence agg and
     # the dup join-back; materializing it once (narrow (doc_id, i,
@@ -761,7 +755,7 @@ ORACLE = {
         "FROM documents GROUP BY text"
     ),
     "q_dedup_exact_substring": (
-        f"WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents), "
+        f"WITH t AS (SELECT doc_id, {SQL_TOKENS} AS toks FROM documents), "
         "g AS (SELECT doc_id, unnest(list_transform("
         f"  range(1, greatest(len(toks) - {_SUBSTR_TOKENS} + 1, 0) + 1), "
         f"  i -> md5(array_to_string(toks[i : i + {_SUBSTR_TOKENS} - 1], ' ')))) "
@@ -775,7 +769,7 @@ ORACLE = {
         # idiom; token reassembly via explode + string_agg ORDER BY
         # position (the Spark side filters the token array in place
         # — the two formulations cross-check through the cert)
-        f"WITH t AS (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents), "
+        f"WITH t AS (SELECT doc_id, {SQL_TOKENS} AS toks FROM documents), "
         "wn AS (SELECT doc_id, i, md5(array_to_string("
         f"  toks[i : i + {_SUBSTR_TOKENS} - 1], ' ')) AS h "
         "  FROM (SELECT doc_id, toks, unnest(range(1, "
@@ -837,7 +831,7 @@ ORACLE = {
         "FROM documents GROUP BY 1"
     ),
     "q_dedup_paragraph": (
-        "WITH t AS (SELECT doc_id, " + _SQL_TOKENS + " AS toks FROM documents), "
+        "WITH t AS (SELECT doc_id, " + SQL_TOKENS + " AS toks FROM documents), "
         "idx AS (SELECT doc_id, toks, unnest(range(CAST(ceil(len(toks) / "
         f"{_SPAN}.0) AS BIGINT))) AS span_idx FROM t), "
         "spans AS (SELECT doc_id, span_idx, array_to_string("
@@ -855,7 +849,7 @@ ORACLE = {
         "FROM totals t LEFT JOIN kept k USING (doc_id)"
     ),
     "q_dedup_containment": (
-        "WITH t AS (SELECT doc_id, " + _SQL_TOKENS + " AS toks FROM documents), "
+        "WITH t AS (SELECT doc_id, " + SQL_TOKENS + " AS toks FROM documents), "
         "sh AS (SELECT doc_id, list_distinct(list_transform("
         "  range(1, greatest(len(toks) - 2, 0) + 1), "
         "  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s FROM t), "
@@ -875,7 +869,7 @@ ORACLE = {
         "round(n_inter * 1.0 / n_b, 6)) >= 0.5"
     ),
     "q_dedup_ngram_jaccard": (
-        "WITH t AS (SELECT doc_id, " + _SQL_TOKENS + " AS toks FROM documents), "
+        "WITH t AS (SELECT doc_id, " + SQL_TOKENS + " AS toks FROM documents), "
         "sh AS (SELECT doc_id, list_distinct(list_transform("
         "  range(1, greatest(len(toks) - 2, 0) + 1), "
         "  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s FROM t), "
@@ -1095,7 +1089,7 @@ def q_dedup_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus independently. Narrow (doc_id, toks) rows checkpoint
     # cheaply; shingles recompute from them in parallel.
     d = _spread(
-        table(spark, sf_dir, "documents").select("doc_id", _tokens().alias("toks"))
+        table(spark, sf_dir, "documents").select("doc_id", tokens().alias("toks"))
     ).localCheckpoint()
     inter = shingle_intersections_frame(d)
     jac = F.round(
@@ -1164,7 +1158,7 @@ _MH_AB_VALUES = ", ".join(
 )
 
 ORACLE["q_dedup_minhash_est"] = (
-    "WITH t AS (SELECT doc_id, " + _SQL_TOKENS + " AS toks FROM documents), "
+    "WITH t AS (SELECT doc_id, " + SQL_TOKENS + " AS toks FROM documents), "
     "shl AS (SELECT doc_id, list_distinct(list_transform("
     "  range(1, greatest(len(toks) - 2, 0) + 1), "
     "  i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS s FROM t), "
@@ -1222,7 +1216,7 @@ def q_dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = d.select(
         "doc_id",
         F.md5(norm).alias("norm_digest"),
-        F.size(_tokens()).alias("n_tokens"),
+        F.size(tokens()).alias("n_tokens"),
     )
     sizes = keyed.groupBy("norm_digest").agg(
         F.count(F.lit(1)).alias("dup_count")
@@ -1241,7 +1235,7 @@ QUERIES["q_dedup_soft_weights"] = q_dedup_soft_weights
 ORACLE["q_dedup_soft_weights"] = (
     "WITH keyed AS (SELECT doc_id, "
     f"md5({sql_clean_chain('text')}) AS norm_digest, "
-    "len(" + _SQL_TOKENS + ")::BIGINT AS n_tokens "
+    "len(" + SQL_TOKENS + ")::BIGINT AS n_tokens "
     "FROM documents), "
     "sizes AS (SELECT norm_digest, count(*)::BIGINT AS dup_count "
     "FROM keyed GROUP BY norm_digest) "

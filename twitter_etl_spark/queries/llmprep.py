@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cleaning import SQL_TOKENS, tokens
 from ..tables import table
 
 #: context window (tokens) for sequence packing — small enough that
@@ -68,17 +69,10 @@ BM25_B = 0.75
 BM25_TERMS = ("spark", "error", "fast")
 
 
-def _tokens():
-    return F.split(F.trim(F.col("text")), r"\s+")
-
-
 def _eq_term(term: str):
     # single-arg closure: a two-param lambda would be read by PySpark
     # as an (element, index) higher-order function
     return lambda x: x == F.lit(term)
-
-
-_SQL_TOKENS = "string_split_regex(trim(text), '\\s+')"
 
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -96,7 +90,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffling at training time).
     """
     d = table(spark, sf_dir, "documents").select(
-        "source", "doc_id", F.size(_tokens()).alias("n_tok")
+        "source", "doc_id", F.size(tokens()).alias("n_tok")
     )
     return pack_docs(d).groupBy("source", "pack_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -126,7 +120,7 @@ def q_text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     embarrassingly parallel, zero shuffle; chunk text returned as
     md5 so the output stays skinny."""
     d = table(spark, sf_dir, "documents").select(
-        "doc_id", _tokens().alias("t")
+        "doc_id", tokens().alias("t")
     )
     starts = F.sequence(
         F.lit(1), F.greatest(F.size("t"), F.lit(1)), F.lit(CHUNK_S)
@@ -156,7 +150,7 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine contract), rounded at 6.
     """
     d = table(spark, sf_dir, "documents").select(
-        "doc_id", _tokens().alias("t")
+        "doc_id", tokens().alias("t")
     )
     per_doc = d.select(
         "doc_id",
@@ -213,7 +207,7 @@ def q_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-row flags aggregate to one row per source: map-side partial
     counts, one tiny shuffle."""
     d = table(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = tokens()
     n_words = F.size(toks)
     sum_len = F.length(F.regexp_replace(F.trim(F.col("text")), r"\s+", ""))
     n_chars = F.length("text")
@@ -312,7 +306,7 @@ def q_text_squeeze_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     on both engines: Spark ``get`` is 0-based/NULL-safe, DuckDB
     ``l[0]`` is NULL). Zero shuffle."""
     d = table(spark, sf_dir, "documents").select(
-        "doc_id", _tokens().alias("t")
+        "doc_id", tokens().alias("t")
     )
     squeezed = F.filter(
         "t",
@@ -348,7 +342,7 @@ def q_pack_bestfit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ship_package_to_executors(spark)
     d = table(spark, sf_dir, "documents").select(
-        "source", "doc_id", F.size(_tokens()).alias("n_tok")
+        "source", "doc_id", F.size(tokens()).alias("n_tok")
     )
     ctx = PACK_CTX  # bind locally: the closure must not need the package
 
@@ -393,9 +387,9 @@ QUERIES = {
 }
 
 _PER_DOC_BM25 = (
-    "SELECT doc_id, len(" + _SQL_TOKENS + ") AS dl, "
+    "SELECT doc_id, len(" + SQL_TOKENS + ") AS dl, "
     + ", ".join(
-        "len(list_filter(" + _SQL_TOKENS + ", x -> x = '%s')) AS tf_%d"
+        "len(list_filter(" + SQL_TOKENS + ", x -> x = '%s')) AS tf_%d"
         % (term, i)
         for i, term in enumerate(BM25_TERMS)
     )
@@ -412,7 +406,7 @@ _BM25_SCORE = " + ".join(
 
 ORACLE = {
     "q_text_squeeze_runs": (
-        "WITH t AS (SELECT doc_id, " + _SQL_TOKENS + " AS l "
+        "WITH t AS (SELECT doc_id, " + SQL_TOKENS + " AS l "
         "FROM documents), "
         # DuckDB lambda index is 1-based; l[0] is NULL -> coalesce
         # keeps the first token, mirroring Spark's 0-based get()
@@ -424,7 +418,7 @@ ORACLE = {
     ),
     "q_pack_sequences": (
         "WITH toks AS (SELECT source, doc_id, "
-        "len(" + _SQL_TOKENS + ") AS n_tok FROM documents), "
+        "len(" + SQL_TOKENS + ") AS n_tok FROM documents), "
         "packed AS (SELECT source, n_tok, "
         "floor((sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id "
         "ROWS UNBOUNDED PRECEDING) - n_tok) / %d)::BIGINT AS pack_id "
@@ -436,7 +430,7 @@ ORACLE = {
         % PACK_CTX
     ),
     "q_text_chunk_overlap": (
-        "WITH toks AS (SELECT doc_id, " + _SQL_TOKENS + " AS t "
+        "WITH toks AS (SELECT doc_id, " + SQL_TOKENS + " AS t "
         "FROM documents), "
         "chunks AS (SELECT doc_id, t, unnest(generate_series(1, "
         "greatest(len(t), 1), %(s)d)) AS start FROM toks) "
@@ -461,14 +455,14 @@ ORACLE = {
     ),
     "q_quality_gopher": (
         "WITH flags AS (SELECT source, "
-        "(len(" + _SQL_TOKENS + ") BETWEEN 10 AND 1000)::BIGINT "
+        "(len(" + SQL_TOKENS + ") BETWEEN 10 AND 1000)::BIGINT "
         "AS r_words, "
         "(length(regexp_replace(trim(text), '\\s+', '', 'g')) "
-        "BETWEEN 3 * len(" + _SQL_TOKENS + ") "
-        "AND 10 * len(" + _SQL_TOKENS + "))::BIGINT AS r_wordlen, "
+        "BETWEEN 3 * len(" + SQL_TOKENS + ") "
+        "AND 10 * len(" + SQL_TOKENS + "))::BIGINT AS r_wordlen, "
         "(10 * (length(text) - length(regexp_replace(text, "
         "'[^A-Za-z0-9 ]', '', 'g'))) <= length(text))::BIGINT AS r_symbol, "
-        "(len(list_filter(" + _SQL_TOKENS + ", x -> x IN "
+        "(len(list_filter(" + SQL_TOKENS + ", x -> x IN "
         "('the', 'a', 'of', 'and', 'is', 'in', 'to'))) >= 2)::BIGINT "
         "AS r_stop FROM documents) "
         # sum(BIGINT) -> HUGEINT -> pandas float64; cast each for the
@@ -529,7 +523,7 @@ def q_quality_c4_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse map-side to one row per source."""
     d = table(spark, sf_dir, "documents")
     low = F.lower(F.col("text"))
-    toks = _tokens()
+    toks = tokens()
     r_brace = (~low.contains("{") & ~low.contains("}")).cast("bigint")
     r_lorem = (~low.contains("lorem ipsum")).cast("bigint")
     r_js = (~low.contains("javascript")).cast("bigint")
@@ -579,7 +573,7 @@ ORACLE["q_quality_c4_rules"] = (
     "(NOT contains(lower(text), 'privacy policy') "
     " AND NOT contains(lower(text), 'cookie policy') "
     " AND NOT contains(lower(text), 'terms of use'))::BIGINT AS r_policy, "
-    "(len(" + _SQL_TOKENS + ") >= 5)::BIGINT AS r_words, "
+    "(len(" + SQL_TOKENS + ") >= 5)::BIGINT AS r_words, "
     "regexp_matches(trim(text), '[.!?\"'']$')::BIGINT AS r_punct "
     "FROM documents) "
     "SELECT source, count(*)::BIGINT AS n_docs, "
@@ -619,7 +613,7 @@ def q_quality_rep_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     ((doc, n, gram) counts → (doc, n) masses); hot grams collapse
     map-side."""
     d = table(spark, sf_dir, "documents").select(
-        "doc_id", _tokens().alias("toks")
+        "doc_id", tokens().alias("toks")
     )
     toks = F.col("toks")
     sz = F.size(toks)
@@ -686,7 +680,7 @@ def _rep_ngrams_sql() -> str:
         "i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])"
     )
     return (
-        "WITH t AS (SELECT doc_id, " + _SQL_TOKENS + " AS toks FROM documents), "
+        "WITH t AS (SELECT doc_id, " + SQL_TOKENS + " AS toks FROM documents), "
         f"grams AS (SELECT doc_id, 2 AS n, unnest({g2}) AS gram FROM t "
         f"UNION ALL SELECT doc_id, 3, unnest({g3}) FROM t), "
         "c AS (SELECT doc_id, n, gram, count(*)::BIGINT AS c "
@@ -835,7 +829,7 @@ def _length_bucket_sql() -> str:
         f"WHEN n_tok <= {c} THEN {c}" for c in _LB_CAPS[1:]
     ) + " ELSE -1 END"
     return (
-        "WITH t AS (SELECT lang, len(" + _SQL_TOKENS + ")::BIGINT AS n_tok "
+        "WITH t AS (SELECT lang, len(" + SQL_TOKENS + ")::BIGINT AS n_tok "
         "FROM documents), "
         f"b AS (SELECT lang, ({ladder})::BIGINT AS cap, n_tok FROM t), "
         "cells AS (SELECT lang, cap, count(*)::BIGINT AS n_docs, "

@@ -31,8 +31,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cleaning import tokens
 from ..tables import table
-from .dedup import _spread, _tokens
+from .dedup import _spread
 
 # Misra-Gries counter budget per task, and the heavy-hitter
 # threshold denominator: we return tokens with count > N / _HH_K.
@@ -95,7 +96,7 @@ def q_text_heavyhitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ship_package_to_executors
 
     ship_package_to_executors(spark)
-    d = _spread(table(spark, sf_dir, "documents").select(_tokens().alias("toks")))
+    d = _spread(table(spark, sf_dir, "documents").select(tokens().alias("toks")))
     toks = d.select(F.explode("toks").alias("token"))
     candidates = (
         toks.mapInPandas(_misra_gries_partition, schema="token string")
@@ -247,7 +248,7 @@ def q_agg_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe side joins the 1024-cell sketch broadcast. The exact
     top-k comparison column is fixture-scale validation — at 100 TB
     you would probe with a known query set instead."""
-    d = _spread(table(spark, sf_dir, "documents").select(_tokens().alias("toks")))
+    d = _spread(table(spark, sf_dir, "documents").select(tokens().alias("toks")))
     toks = d.select(F.explode("toks").alias("token"))
     depths = F.explode(
         F.sequence(F.lit(0), F.lit(_CM_DEPTH - 1))

@@ -16,13 +16,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cleaning import SQL_TOKENS, tokens
 from ..stopwords import STOPWORD_PATTERN
 from ..tables import table
-
-def _tokens():
-    return F.split(F.trim(F.col("text")), r"\s+")
-
-_SQL_TOKENS = "string_split_regex(trim(text), '\\s+')"
 
 #: tiny sentiment lexicon (domain words from the fixture vocabulary)
 LEXICON: tuple[tuple[str, int], ...] = (
@@ -42,7 +38,7 @@ _EN_MARKERS = r"\b(the|a|of|and|is|in|to|it|for|on)\b"
 def q_text_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace tokenization to an array column."""
     return table(spark, sf_dir, "documents").select(
-        "doc_id", F.array_join(_tokens(), " ").alias("tokens_str")
+        "doc_id", F.array_join(tokens(), " ").alias("tokens_str")
     )
 
 
@@ -51,7 +47,7 @@ def q_text_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     the word key (map-side partial counts first)."""
     d = table(spark, sf_dir, "documents")
     return (
-        d.select(F.explode(_tokens()).alias("word"))
+        d.select(F.explode(tokens()).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -60,7 +56,7 @@ def q_text_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram extraction + counts via higher-order functions
     (transform over an index sequence — no UDF)."""
-    d = table(spark, sf_dir, "documents").select("doc_id", _tokens().alias("t"))
+    d = table(spark, sf_dir, "documents").select("doc_id", tokens().alias("t"))
     # zip_with over shifted slices: stays codegen'd (element_at with a
     # lambda index would fall back to interpreted eval, ~9x slower)
     count = F.greatest(F.size("t") - 1, F.lit(0))
@@ -100,7 +96,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = table(spark, sf_dir, "documents")
-    words = d.select("doc_id", F.explode(_tokens()).alias("word"))
+    words = d.select("doc_id", F.explode(tokens()).alias("word"))
     tf = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
     # df via an unordered count window over the tf frame: ONE shuffle
     # of tf by word, vs the groupBy-then-join form's two (df agg +
@@ -128,7 +124,7 @@ def q_text_lexicon_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     word->score lexicon, sum per document."""
     d = table(spark, sf_dir, "documents")
     lex = spark.createDataFrame(list(LEXICON), ["word", "score"])
-    words = d.select("doc_id", F.explode(_tokens()).alias("word"))
+    words = d.select("doc_id", F.explode(tokens()).alias("word"))
     return (
         words.join(F.broadcast(lex), "word")
         .groupBy("doc_id")
@@ -162,7 +158,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document quality scoring: length / punctuation / stopword
     ratios + a quality band — pure per-row projections."""
     d = table(spark, sf_dir, "documents")
-    n_tokens = F.size(_tokens())
+    n_tokens = F.size(tokens())
     chars_no_ws = F.length(F.regexp_replace(F.col("text"), r"\s", ""))
     punct = F.length(F.col("text")) - F.length(
         F.regexp_replace(F.col("text"), r"[^\w\s]", "")
@@ -191,7 +187,7 @@ def q_text_tokencount(spark: SparkSession, sf_dir: str) -> DataFrame:
     chars_no_ws = F.length(F.regexp_replace(F.col("text"), r"\s", ""))
     return d.select(
         "doc_id",
-        F.size(_tokens()).alias("ws_tokens"),
+        F.size(tokens()).alias("ws_tokens"),
         F.size(F.regexp_extract_all(F.col("text"), F.lit(r"\w+|[^\w\s]"), 0)).alias(
             "piece_tokens"
         ),
@@ -223,15 +219,15 @@ QUERIES = {
 _LEX_VALUES = ", ".join(f"('{w}', {s})" for w, s in LEXICON)
 
 ORACLE = {
-    "q_text_tokenize": f"SELECT doc_id, array_to_string({_SQL_TOKENS}, ' ') AS tokens_str FROM documents",
+    "q_text_tokenize": f"SELECT doc_id, array_to_string({SQL_TOKENS}, ' ') AS tokens_str FROM documents",
     "q_text_wordcount": (
         f"SELECT word, count(*)::BIGINT AS n FROM ("
-        f"SELECT unnest({_SQL_TOKENS}) AS word FROM documents) GROUP BY word"
+        f"SELECT unnest({SQL_TOKENS}) AS word FROM documents) GROUP BY word"
     ),
     "q_text_ngrams": (
         "SELECT bigram, count(*)::BIGINT AS n FROM ("
-        f"  SELECT unnest(list_transform(range(1, len({_SQL_TOKENS})), "
-        f"    i -> {_SQL_TOKENS}[i] || ' ' || {_SQL_TOKENS}[i+1])) AS bigram "
+        f"  SELECT unnest(list_transform(range(1, len({SQL_TOKENS})), "
+        f"    i -> {SQL_TOKENS}[i] || ' ' || {SQL_TOKENS}[i+1])) AS bigram "
         "  FROM documents) GROUP BY bigram"
     ),
     "q_text_hashtags": (
@@ -242,7 +238,7 @@ ORACLE = {
     ),
     "q_text_tfidf": (
         "WITH words AS ("
-        f"  SELECT doc_id, unnest({_SQL_TOKENS}) AS word FROM documents), "
+        f"  SELECT doc_id, unnest({SQL_TOKENS}) AS word FROM documents), "
         "tf AS (SELECT doc_id, word, count(*)::BIGINT AS tf "
         "       FROM words GROUP BY doc_id, word), "
         "df AS (SELECT word, count(*)::BIGINT AS df FROM "
@@ -255,7 +251,7 @@ ORACLE = {
     "q_text_lexicon_join": (
         "WITH lex(word, score) AS (VALUES " + _LEX_VALUES + "), "
         "words AS ("
-        f"  SELECT doc_id, unnest({_SQL_TOKENS}) AS word FROM documents) "
+        f"  SELECT doc_id, unnest({SQL_TOKENS}) AS word FROM documents) "
         "SELECT doc_id, CAST(sum(score) AS BIGINT) AS sentiment, "
         "count(*)::BIGINT AS n_scored_tokens "
         "FROM words JOIN lex USING (word) GROUP BY doc_id"
@@ -273,20 +269,20 @@ ORACLE = {
     ),
     "q_text_quality": (
         "SELECT doc_id, length(text)::INT AS n_chars_raw, "
-        f"len({_SQL_TOKENS})::INT AS n_tokens, "
-        f"round(length(regexp_replace(text, '\\s', '', 'g')) * 1.0 / len({_SQL_TOKENS}), 6) AS avg_token_len, "
+        f"len({SQL_TOKENS})::INT AS n_tokens, "
+        f"round(length(regexp_replace(text, '\\s', '', 'g')) * 1.0 / len({SQL_TOKENS}), 6) AS avg_token_len, "
         "round((length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))) * 1.0 "
         "      / length(text), 6) AS punct_ratio, "
         f"round(len(regexp_extract_all(lower(text), '{STOPWORD_PATTERN}')) * 1.0 "
-        f"      / len({_SQL_TOKENS}), 6) AS stopword_ratio, "
-        f"CASE WHEN len({_SQL_TOKENS}) >= 20 AND "
+        f"      / len({SQL_TOKENS}), 6) AS stopword_ratio, "
+        f"CASE WHEN len({SQL_TOKENS}) >= 20 AND "
         f"          round(len(regexp_extract_all(lower(text), '{STOPWORD_PATTERN}')) * 1.0 "
-        f"                / len({_SQL_TOKENS}), 6) < 0.5 "
+        f"                / len({SQL_TOKENS}), 6) < 0.5 "
         "      THEN 'good' ELSE 'low' END AS quality_band "
         "FROM documents"
     ),
     "q_text_tokencount": (
-        f"SELECT doc_id, len({_SQL_TOKENS})::INT AS ws_tokens, "
+        f"SELECT doc_id, len({SQL_TOKENS})::INT AS ws_tokens, "
         "len(regexp_extract_all(text, '\\w+|[^\\w\\s]'))::INT AS piece_tokens, "
         "CAST(floor((length(regexp_replace(text, '\\s', '', 'g')) + 3) / 4) AS BIGINT) "
         "AS est_subword_tokens "
@@ -328,7 +324,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repetition score (low-quality filter): the most frequent
     token's share of the document. One explode + per-doc agg."""
     d = table(spark, sf_dir, "documents")
-    words = d.select("doc_id", F.explode(_tokens()).alias("word"))
+    words = d.select("doc_id", F.explode(tokens()).alias("word"))
     per_word = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("c"))
     return per_word.groupBy("doc_id").agg(
         F.max("c").alias("top_token_count"),
@@ -369,7 +365,7 @@ def q_text_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k compiles to TakeOrderedAndProject; (n desc, pair) is a
     total order so the cut is deterministic."""
     d = table(spark, sf_dir, "documents")
-    words = d.select(F.explode(_tokens()).alias("word")).where(F.col("word") != "")
+    words = d.select(F.explode(tokens()).alias("word")).where(F.col("word") != "")
     wc = words.groupBy("word").agg(F.count(F.lit(1)).alias("n_w"))
     pairs = wc.select(
         "n_w",
@@ -413,7 +409,7 @@ ORACLE.update(
         "q_text_repetition": (
             "WITH per_word AS ("
             f"  SELECT doc_id, word, count(*)::BIGINT AS c FROM ("
-            f"    SELECT doc_id, unnest({_SQL_TOKENS}) AS word FROM documents) "
+            f"    SELECT doc_id, unnest({SQL_TOKENS}) AS word FROM documents) "
             "   GROUP BY doc_id, word) "
             "SELECT doc_id, max(c) AS top_token_count, "
             "CAST(sum(c) AS BIGINT) AS n_tokens, "
@@ -426,7 +422,7 @@ ORACLE.update(
             "FROM documents GROUP BY 1, 2"
         ),
         "q_text_bpe_pairs": (
-            "WITH w AS (SELECT unnest(" + _SQL_TOKENS + ") AS word FROM documents), "
+            "WITH w AS (SELECT unnest(" + SQL_TOKENS + ") AS word FROM documents), "
             "wc AS (SELECT word, count(*)::BIGINT AS n_w FROM w "
             "  WHERE word <> '' GROUP BY word), "
             "p AS (SELECT n_w, unnest(list_filter(list_transform("
@@ -485,7 +481,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     greedy fold runs once per DISTINCT word, never per corpus
     token."""
     d = table(spark, sf_dir, "documents")
-    words = d.select(F.explode(_tokens()).alias("word")).where(
+    words = d.select(F.explode(tokens()).alias("word")).where(
         F.col("word") != ""
     )
     wc = (
@@ -562,7 +558,7 @@ def q_text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, vocab = _bpe_train(spark, sf_dir)
     enc = vocab.select("word", F.size("syms").alias("n_syms"))
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(_tokens()).alias("word")).where(
+    toks = d.select("doc_id", F.explode(tokens()).alias("word")).where(
         F.col("word") != ""
     )
     return toks.join(enc, "word").groupBy("doc_id").agg(
@@ -619,7 +615,7 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     n_frame = d.agg(F.count(F.lit(1)).alias("n_docs"))
     toks = (
-        d.select("doc_id", F.explode(_tokens()).alias("tok"))
+        d.select("doc_id", F.explode(tokens()).alias("tok"))
         .where(F.length("tok") >= 2)
         .distinct()
     )
@@ -660,7 +656,7 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["q_text_pmi"] = q_text_pmi
 ORACLE["q_text_pmi"] = (
     "WITH toks AS (SELECT DISTINCT doc_id, tok FROM (SELECT doc_id, "
-    "unnest(" + _SQL_TOKENS + ") AS tok FROM documents) "
+    "unnest(" + SQL_TOKENS + ") AS tok FROM documents) "
     "WHERE length(tok) >= 2), "
     "capped AS (SELECT doc_id, tok FROM (SELECT doc_id, tok, "
     "row_number() OVER (PARTITION BY doc_id ORDER BY tok) AS rn "
@@ -758,7 +754,7 @@ def _unigram_seed(spark: SparkSession, sf_dir: str):
     d = table(spark, sf_dir, "documents")
     wc = cache_latest(
         "unigram_vocab",
-        d.select(F.explode(_tokens()).alias("word"))
+        d.select(F.explode(tokens()).alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n_w")),
@@ -873,7 +869,7 @@ def q_text_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vocab_np = wc.select("word", F.size(seg("word")).alias("n_p"))
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(_tokens()).alias("word")).where(
+    toks = d.select("doc_id", F.explode(tokens()).alias("word")).where(
         F.col("word") != ""
     )
     return toks.join(vocab_np, "word").groupBy("doc_id").agg(

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .cleaning import tokens
 from .sinks import batch_hwm, latest_version, publish_version, read_version
 
 #: partial-state schema (the mergeable monoid) of the lang rollup;
@@ -384,9 +385,9 @@ _MINHASH_STATE_COLS = ("doc_id", "sigs", "sh")
 
 def _minhash_doc_rows(new_docs: DataFrame) -> DataFrame:
     from .queries.corpus import minhash_doc_state
-    from .queries.dedup import _shingles, _spread, _tokens
+    from .queries.dedup import _shingles, _spread
 
-    t = _spread(new_docs.select("doc_id", _tokens().alias("toks")))
+    t = _spread(new_docs.select("doc_id", tokens().alias("toks")))
     sh = t.select("doc_id", _shingles().alias("s")).filter(F.size("s") > 0)
     return minhash_doc_state(sh)
 
@@ -895,9 +896,9 @@ _SUBSTR_STATE_COLS = ("h", "first_doc", "first_i", "n_occ")
 
 
 def _window_state(new_docs: DataFrame) -> DataFrame:
-    from .queries.dedup import _tokens, _windows
+    from .queries.dedup import _windows
 
-    d = new_docs.select("doc_id", _tokens().alias("toks"))
+    d = new_docs.select("doc_id", tokens().alias("toks"))
     return (
         _windows(d)
         .groupBy("h")
@@ -951,10 +952,10 @@ def probe_substring_cut(
     union of absorbed batches restricted to the batch's doc_ids.
     Only the BATCH is re-windowed; history contributes nothing but
     its merged (first, count) state rows for the touched digests."""
-    from .queries.dedup import _reassemble_cut, _tokens, _windows
+    from .queries.dedup import _reassemble_cut, _windows
 
     st = read_version(spark, rollup_dir, version)
-    d = batch_docs.select("doc_id", _tokens().alias("toks"))
+    d = batch_docs.select("doc_id", tokens().alias("toks"))
     wins = _windows(d)
     dup = wins.join(st, "h").filter(
         (F.col("n_occ") >= 2)
