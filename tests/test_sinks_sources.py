@@ -370,8 +370,9 @@ def test_rollup_null_chars_and_state_schema(spark, tmp_path):
 
 
 def test_key_index_schema_matches_constant(spark, tmp_path):
-    """The global-dedup key index is read with ``KEY_INDEX_SCHEMA``;
-    what the stream writes must have exactly that schema."""
+    """The global-dedup sink is its own key index, read with
+    ``KEY_INDEX_SCHEMA``; the digest column the stream writes must
+    have exactly that schema."""
     import json
 
     from twitter_etl_spark.streaming.microbatch import (
@@ -386,7 +387,8 @@ def test_key_index_schema_matches_constant(spark, tmp_path):
     (landing / "stream_1.json").write_text(json.dumps(doc) + "\n")
     sink = str(tmp_path / "sink")
     run_microbatch_pipeline_global_dedup(spark, str(landing), sink, str(tmp_path / "ckpt"))
-    assert spark.read.parquet(key_index_path(sink)).schema == KEY_INDEX_SCHEMA
+    assert key_index_path(sink) == sink
+    assert spark.read.parquet(sink).select("digest").schema == KEY_INDEX_SCHEMA
 
 
 def test_compact_sorted_tightens_rowgroup_stats(spark, tmp_path):

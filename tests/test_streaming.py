@@ -264,16 +264,11 @@ def test_microbatch_global_dedup(spark):
     assert out.count() == 3  # normalized dup of batch 1 dropped globally
     assert out.filter(F.col("content") == "hola mundo").count() == 1
 
-    # the decision comes from the compact digest index, not a sink
-    # rescan: one digest per sink row, matching md5(content)
-    from twitter_etl_spark.streaming.microbatch import key_index_path
-
-    idx = spark.read.parquet(key_index_path(sink))
-    assert idx.columns == ["digest"]
-    sink_digests = {
-        r["d"] for r in out.select(F.md5("content").alias("d")).collect()
-    }
-    assert {r["digest"] for r in idx.collect()} == sink_digests
+    # the sink is its own key index: each row carries the 16-byte
+    # md5 of its content, and no side index is written
+    assert out.columns == ["tweet_id", "lang", "content", "source", "digest"]
+    assert out.filter(F.col("digest") != F.unhex(F.md5("content"))).count() == 0
+    assert sorted(os.listdir(base)) == ["ckpt", "landing", "sink"]
 
 
 @pytest.mark.slow
@@ -396,14 +391,36 @@ def test_rate_source_live_cadence(spark):
     assert out.filter(~F.col("content").startswith("hola mundo")).count() == 0
 
 
-def test_microbatch_global_dedup_uses_index_not_sink(spark):
-    """Remove the sink but keep the index: a replayed duplicate is
-    still dropped — proof the anti-join probes the digest index and
-    never re-reads sink parquet."""
-    import shutil
+def _sql_plans(spark, query) -> list[str]:
+    """Physical plan descriptions of the SQL executions that streaming
+    ``query`` ran (their description names its ``runId``), read from
+    the session's SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    run_id = f"runId = {query.runId}"
+    return [
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if run_id in e.description()
+    ]
 
+
+def _scan_schemas(spark, query, path: str) -> set[str]:
+    """``ReadSchema`` of every parquet scan of ``path`` in those plans."""
+    return {
+        block.rsplit("ReadSchema: ", 1)[1].split()[0]
+        for plan in _sql_plans(spark, query)
+        for block in plan.split("\n\n")
+        if "Scan parquet" in block.split("\n", 1)[0] and f"[file:{path}]" in block
+    }
+
+
+def test_microbatch_global_dedup_uses_index_not_sink(spark):
+    """The anti-join reads the sink as its key index: every scan of
+    the sink inside the stream reads the digest column alone
+    (``struct<digest:binary>``), never the documents, and a later
+    duplicate of the first batch is still dropped."""
     from twitter_etl_spark.streaming.microbatch import (
-        key_index_path,
         run_microbatch_pipeline_global_dedup,
     )
 
@@ -413,18 +430,15 @@ def test_microbatch_global_dedup_uses_index_not_sink(spark):
     ckpt = os.path.join(base, "ckpt")
     _write_landing_file(landing, "stream_1.json", [_doc(1, "hola mundo")])
     run_microbatch_pipeline_global_dedup(spark, landing, sink, ckpt)
-    assert spark.read.parquet(sink).count() == 1
-
-    shutil.rmtree(sink)  # sink gone; only the index remains
     _write_landing_file(
         landing, "stream_2.json", [_doc(2, "HOLA  mundo"), _doc(3, "otra frase")]
     )
-    run_microbatch_pipeline_global_dedup(spark, landing, sink, ckpt)
-    out = spark.read.parquet(sink).collect()
-    # dup of the (now-deleted) first batch was dropped via the index
+    q = run_microbatch_pipeline_global_dedup(spark, landing, sink, ckpt)
     # ("otra" is a stopword, so the survivor cleans to "frase")
-    assert [r["content"] for r in out] == ["frase"]
-    assert spark.read.parquet(key_index_path(sink)).count() == 2
+    assert sorted(r["content"] for r in spark.read.parquet(sink).collect()) == [
+        "frase", "hola mundo"
+    ]
+    assert _scan_schemas(spark, q, sink) == {"struct<digest:binary>"}
 
 
 _CACHED_PARTITIONING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
@@ -463,48 +477,39 @@ def _global_dedup_two_batches(spark):
 
 
 def test_global_dedup_writes_one_file_per_batch(spark):
-    """The cached survivor set of each batch is coalesced by AQE, so a
-    batch of a few hundred rows appends one parquet file to the sink
-    and one to the key-digest index (not one per shuffle partition),
-    with the same rows and digests; the setting stays on the stream's
-    own session and the caller's session keeps Spark's default."""
-    from twitter_etl_spark.streaming.microbatch import key_index_path
-
+    """A batch of a few hundred rows appends one parquet file to the
+    sink (not one per shuffle partition) and nothing else: the sink
+    carries each row's digest, and no side index is written. The
+    caller's session keeps Spark's default cached-plan partitioning."""
     _, sink, _, expected = _global_dedup_two_batches(spark)
     assert len(_part_files(sink)) == 2
-    assert len(_part_files(key_index_path(sink))) == 2
+    assert not os.path.exists(sink + "_keyidx")
     out = spark.read.parquet(sink)
     assert {(r["tweet_id"], r["content"]) for r in out.collect()} == expected
-    assert set(out.columns) == {"tweet_id", "lang", "content", "source"}
-    idx = [r["digest"] for r in spark.read.parquet(key_index_path(sink)).collect()]
-    assert sorted(idx) == sorted(
-        r["d"] for r in out.select(F.md5("content").alias("d")).collect()
-    )
+    assert out.columns == ["tweet_id", "lang", "content", "source", "digest"]
+    assert out.filter(F.col("digest") != F.unhex(F.md5("content"))).count() == 0
     assert spark.conf.get(_CACHED_PARTITIONING) == "false"
 
 
 def test_global_dedup_all_seen_batch_writes_nothing(spark):
-    """A batch whose every ``es`` row is already in the index passes
-    the empty-chunk guard (``main.R:75-78, 114``) on the coalesced
-    cached path: no sink file, no index file, no empty parquet."""
+    """A batch whose every ``es`` row is already in the sink passes
+    the empty-chunk guard (``main.R:75-78, 114``), ``isEmpty`` on the
+    cached survivors: no sink file, no empty parquet."""
     from twitter_etl_spark.streaming.microbatch import (
-        key_index_path,
         run_microbatch_pipeline_global_dedup,
     )
 
     landing, sink, ckpt, expected = _global_dedup_two_batches(spark)
-    index = key_index_path(sink)
-    sink_files, index_files = _part_files(sink), _part_files(index)
+    sink_files = _part_files(sink)
     third = [_doc(2000 + i, f"TUIT{i}   mundo") for i in range(0, 450, 3)]
     third += [_doc(3000 + i, f"nuevo{i} world", lang="en") for i in range(5)]
     _write_landing_file(landing, "stream_3.json", third)
     q = run_microbatch_pipeline_global_dedup(spark, landing, sink, ckpt)
     assert sum(p.numInputRows for p in q.recentProgress) == len(third)
     assert _part_files(sink) == sink_files
-    assert _part_files(index) == index_files
     out = spark.read.parquet(sink)
     assert {(r["tweet_id"], r["content"]) for r in out.collect()} == expected
-    assert spark.read.parquet(index).count() == len(expected)
+    assert out.count() == len(expected)
     assert spark.conf.get(_CACHED_PARTITIONING) == "false"
 
 
@@ -582,6 +587,104 @@ def test_stream_equals_batch_transform(spark):
     assert _rows(spark.read.parquet(dedup)) == want_dedup
 
 
+def test_global_dedup_skips_replayed_batch(spark):
+    """A batch the checkpoint replays (its commit file lost after the
+    sink append) finds its own digests in the sink: the replay adds no
+    part file and the rows stay keep-first across both files, the
+    second null ``content`` still dropped."""
+    from twitter_etl_spark.sources import read_ndjson
+    from twitter_etl_spark.streaming.microbatch import (
+        run_microbatch_pipeline_global_dedup,
+        transform_batch,
+    )
+
+    base, landing = _two_file_landing()
+    sink, ckpt = os.path.join(base, "dedup"), os.path.join(base, "ck_dedup")
+    run_microbatch_pipeline_global_dedup(spark, landing, sink, ckpt)
+    files, before = _part_files(sink), _rows(spark.read.parquet(sink))
+    assert before == _rows(transform_batch(read_ndjson(spark, landing)))
+    for name in ("1", ".1.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    q = run_microbatch_pipeline_global_dedup(spark, landing, sink, ckpt)
+    assert [p.batchId for p in q.recentProgress] == [1]  # batch 1 replayed
+    assert _part_files(sink) == files
+    assert _rows(spark.read.parquet(sink)) == before
+
+
+def _one_file_landing(n: int = 300) -> tuple[str, str]:
+    """One landing file of ``n`` docs: ``es`` rows whose contents
+    repeat every 50 ids, and every fifth row ``en``."""
+    base = tempfile.mkdtemp()
+    landing = os.path.join(base, "landing")
+    docs = [_doc(i, f"tuit{i % 50} mundo", lang="es" if i % 5 else "en") for i in range(n)]
+    _write_landing_file(landing, "stream_1.json", docs)
+    return base, landing
+
+
+def _run_both_sinks(spark, base: str, landing: str) -> dict:
+    """Run the append and the global-dedup streams over ``landing``;
+    return each stream's query by sink path."""
+    from twitter_etl_spark.streaming.microbatch import (
+        run_microbatch_pipeline_global_dedup,
+    )
+
+    runners = {
+        "sink": run_microbatch_pipeline,
+        "dedup": run_microbatch_pipeline_global_dedup,
+    }
+    return {
+        os.path.join(base, name): run(
+            spark, landing, os.path.join(base, name), os.path.join(base, f"ck_{name}")
+        )
+        for name, run in runners.items()
+    }
+
+
+def test_one_partition_batch_keeps_first_without_shuffle(spark):
+    """A one-file batch is one partition, so keep-first runs inside it:
+    the append batch runs two jobs (the guard and the write), no plan
+    that either stream runs has a shuffle Exchange, and both sinks equal
+    the batch transform of the file."""
+    from twitter_etl_spark.sources import read_ndjson
+    from twitter_etl_spark.streaming.microbatch import transform_batch
+
+    base, landing = _one_file_landing()
+    want = _rows(transform_batch(read_ndjson(spark, landing)))
+    queries = _run_both_sinks(spark, base, landing)
+    tracker = spark.sparkContext.statusTracker()
+    for path, q in queries.items():
+        assert len(q.recentProgress) == 1
+        assert _rows(spark.read.parquet(path)) == want
+        plans = [p.replace("BroadcastExchange", "") for p in _sql_plans(spark, q)]
+        assert plans and not [p for p in plans if "Exchange" in p]
+    sink_q = queries[os.path.join(base, "sink")]
+    assert len(tracker.getJobIdsForGroup(str(sink_q.runId))) == 2
+
+
+def test_split_batch_keeps_the_shuffle(spark):
+    """A batch read as several partitions (a small
+    ``spark.sql.files.maxPartitionBytes`` splits its one file) keeps
+    keep-first's shuffle, and both sinks still equal the batch
+    transform of the file, each written as one parquet file."""
+    from twitter_etl_spark.sources import read_ndjson
+    from twitter_etl_spark.streaming.microbatch import transform_batch
+
+    base, landing = _one_file_landing()
+    want = _rows(transform_batch(read_ndjson(spark, landing)))
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        queries = _run_both_sinks(spark, base, landing)
+    finally:
+        spark.conf.set(key, prior)
+    for path, q in queries.items():
+        assert len(q.recentProgress) == 1
+        assert _rows(spark.read.parquet(path)) == want
+        assert any("hashpartitioning(content" in p for p in _sql_plans(spark, q))
+        assert len(_part_files(path)) == 1
+
+
 def test_append_guard_writes_nothing_for_unkept_rows(spark):
     """The empty-chunk guard (``main.R:75-78, 114``) on the filtered
     rows: an ``en``-only file adds no parquet file, and neither does
@@ -610,9 +713,9 @@ def test_append_guard_writes_nothing_for_unkept_rows(spark):
 def test_append_and_rollup_jobs_per_batch(spark):
     """Each micro-batch runs only the Spark jobs its output needs: the
     append and idempotent streams a limit-1 guard, the keep-first
-    shuffle and the write; the rollup stream its guard, one merge
-    shuffle and the publish (the previous version is read with its
-    known schema)."""
+    shuffle (none for a one-partition batch) and the write; the rollup
+    stream its guard, one merge shuffle and the publish (the previous
+    version is read with its known schema)."""
     from twitter_etl_spark.streaming.microbatch import (
         run_microbatch_pipeline_idempotent,
         run_streaming_rollup,

@@ -21,7 +21,9 @@ jobs its output needs:
   (:func:`keep_first_batch`). The filter stays in the batch: the
   sources then count every landed row, and ``batch_df`` is a
   ``LogicalRDD``, so the ``when`` in the projection is what keeps
-  the regex chain off non-``es`` rows.
+  the regex chain off non-``es`` rows. A batch of one partition (one
+  small landed file) runs the window inside that partition, with no
+  shuffle, so its write is one Spark job.
 
 Differences, both deliberate upgrades:
 
@@ -32,8 +34,9 @@ Differences, both deliberate upgrades:
   (``main.R:165-170``).
 
 Dedup scope matches the reference exactly: per-batch keep-first
-(``main.R:105``) — global dedup is the explicit q_dedup_* operator
-family, not a sink property.
+(``main.R:105``). Cross-batch dedup is the separate
+:func:`run_microbatch_pipeline_global_dedup` stream, whose sink
+carries each row's content digest and so is its own key index.
 """
 
 from __future__ import annotations
@@ -50,9 +53,9 @@ from pyspark.sql import types as T
 from ..cleaning import clean_chain
 from ..sources import DOCUMENTS_SCHEMA, read_ndjson_stream
 
-#: schema of the key-digest index (:func:`key_index_path`): one
-#: ``md5(content)`` hex string per sink row; read with it, not inferred.
-KEY_INDEX_SCHEMA = T.StructType([T.StructField("digest", T.StringType())])
+#: the global-dedup sink's key column, read alone by each batch's
+#: anti-join: ``unhex(md5(content))``, 16 bytes per sink row.
+KEY_INDEX_SCHEMA = T.StructType([T.StructField("digest", T.BinaryType())])
 
 
 def project_docs(df: DataFrame) -> DataFrame:
@@ -70,7 +73,17 @@ def project_docs(df: DataFrame) -> DataFrame:
 
 def keep_first_batch(df: DataFrame) -> DataFrame:
     """Keep-first dedup within the batch (``main.R:105``): the row
-    with the smallest ``tweet_id`` per ``content``."""
+    with the smallest ``tweet_id`` per ``content``. When ``df`` reads
+    one ``LogicalRDD`` (a ``foreachBatch`` frame) of one partition, it
+    is coalesced to one partition: no row moves, and the sort and
+    window run in the scan's stage, without an Exchange. The count is
+    read off that leaf; ``df.rdd`` would plan ``df`` and build a Python
+    RDD (12-15 ms against 0.24 ms a batch on a 4-core VM)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    if leaves.size() == 1:
+        leaf = leaves.head()
+        if leaf.nodeName() == "LogicalRDD" and leaf.rdd().getNumPartitions() == 1:
+            df = df.coalesce(1)
     w = Window.partitionBy("content").orderBy("tweet_id")
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -122,9 +135,9 @@ def _start(
 
 
 def key_index_path(sink_path: str) -> str:
-    """Location of the compact key-digest index maintained next to a
-    global-dedup sink."""
-    return sink_path.rstrip("/") + "_keyidx"
+    """Where the global-dedup stream's key digests live: the sink
+    itself, which carries them in its ``digest`` column."""
+    return sink_path
 
 
 def run_microbatch_pipeline_global_dedup(
@@ -139,47 +152,35 @@ def run_microbatch_pipeline_global_dedup(
     duplicates are dropped ACROSS batches, not just within one (the
     reference keeps cross-chunk duplicates, ``main.R:105``).
 
-    Scale design: the sink itself is NEVER re-read. Each batch
-    anti-joins against a compact **key-digest index**
-    (:func:`key_index_path`) holding one ``md5(content)`` per sink
-    row (the 32-char hex string of ``F.md5``, :data:`KEY_INDEX_SCHEMA`),
-    and appends the surviving digests to the index — per-batch read
-    cost follows the number of *keys ever written* (a few GB at
-    100 TB of documents), not sink size, and the scan is a single
-    column. The digest is computed in the stream's projection; the
-    anti-join is null-safe, so a null ``content`` is deduplicated
-    across batches as keep-first does within one.
+    Layout: the sink is its own key index, with columns ``tweet_id,
+    lang, content, source, digest``; ``digest`` is
+    ``unhex(md5(content))`` (16 bytes, :data:`KEY_INDEX_SCHEMA`),
+    computed in the stream's projection. Each batch anti-joins
+    (null-safe, so a null ``content`` is deduplicated across batches
+    as keep-first does within one) against the sink read with that
+    one-column schema, so only the digest column chunks are scanned: a
+    few GB per batch at 100 TB of documents, plus every file's footer.
 
-    Per-batch shape: one anti-join, one cached survivor set, then one
-    append to the sink and one to the index — one file each at a few
-    hundred rows a batch. The survivor set ends in the keep-first
-    window's shuffle, and Spark keeps a cached plan's shuffle
-    partitioning unless
-    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is
-    on; left off, every batch writes one file per shuffle partition to
-    both, and every later anti-join lists and scans them all. The
-    setting is turned on for the streaming query's own session
-    (``batch_df.sparkSession``, cloned when the query starts), not in
-    ``get_spark``: there it would also change the output partitioning
-    of every frame the query operators persist (their plans are pinned
-    in ``PLAN_SNAPSHOT.json``), while the clone leaves the caller's
-    session at Spark's default.
+    Per batch: one anti-join, one cached survivor set guarded by
+    ``isEmpty`` (an all-seen batch writes nothing), then one append,
+    one file at a few hundred rows a batch. A one-partition batch has
+    no shuffle (:func:`keep_first_batch`); a larger one ends in the
+    keep-first shuffle, whose partitioning Spark keeps for a cached
+    plan unless ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
+    is on, and each batch would then write one file per shuffle
+    partition. The setting is turned on for the streaming query's own
+    session (``batch_df.sparkSession``, cloned when the query starts),
+    not in ``get_spark``, where it would also change the output
+    partitioning of every frame the query operators persist (pinned in
+    ``PLAN_SNAPSHOT.json``).
 
-    On a cluster AQE then sizes each batch's files to the advisory
-    partition size, and the index would be bucketed by digest so only
-    the (small) batch side shuffles.
-
-    Ordering: sink append happens before index append, so a crash
-    between the two replays the batch and re-appends — at-least-once
-    on the sink, never data loss (index-first would silently drop
-    the replayed rows). The checkpoint makes replays rare; an
-    idempotent sink (dynamic-overwrite partition per batch id, or a
-    table format with txn commit) would close the remaining window.
+    Replay: the append is one job commit, so a batch the checkpoint
+    replays (crash after the append, before the commit) finds its own
+    digests and writes nothing: exactly-once on the sink.
     """
     stream = project_docs(
         read_ndjson_stream(spark, landing_dir, DOCUMENTS_SCHEMA)
-    ).withColumn("__digest", F.md5(F.col("content")))
-    index_path = key_index_path(sink_path)
+    ).withColumn("digest", F.unhex(F.md5(F.col("content"))))
     es = _kept_rows()
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -187,19 +188,15 @@ def run_microbatch_pipeline_global_dedup(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
         )
         out = keep_first_batch(batch_df.filter(es))
-        if os.path.exists(index_path):
-            seen = spark.read.schema(KEY_INDEX_SCHEMA).parquet(index_path)
+        if os.path.exists(sink_path):
+            seen = spark.read.schema(KEY_INDEX_SCHEMA).parquet(sink_path)
             out = out.join(
-                seen, out["__digest"].eqNullSafe(seen["digest"]), "left_anti"
+                seen, out["digest"].eqNullSafe(seen["digest"]), "left_anti"
             )
-        out = out.persist()  # one anti-join, two writes
+        out = out.persist()  # one anti-join, guard and write
         try:
-            if out.isEmpty():
-                return
-            out.drop("__digest").write.mode("append").parquet(sink_path)
-            out.select(F.col("__digest").alias("digest")).write.mode(
-                "append"
-            ).parquet(index_path)
+            if not out.isEmpty():
+                out.write.mode("append").parquet(sink_path)
         finally:
             out.unpersist()
 
